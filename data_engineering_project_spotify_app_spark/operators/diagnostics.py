@@ -373,7 +373,7 @@ _FUNNEL_ORACLE_TEMPLATE = """
       ) WHERE rn = 1
     ),
     staged AS (
-      SELECT d.doc_id, d.n_chars,
+      SELECT {keys}d.doc_id, d.n_chars,
              CASE
                WHEN d.n_chars < {floor} THEN 'length'
                WHEN d.doc_id <> ek.keep_id THEN 'exact_dup'
@@ -385,52 +385,70 @@ _FUNNEL_ORACLE_TEMPLATE = """
       JOIN cc ON cc.doc_id = d.doc_id
       JOIN near_keep nk ON nk.cluster_id = cc.cluster_id
     )
-    SELECT stage,
+    SELECT {keys}stage,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS n_chars
-    FROM staged GROUP BY stage
+    FROM staged GROUP BY {keys}stage
     """
 
 
-def _funnel_oracle() -> str:
+def _funnel_oracle(*keys: str) -> str:
     from data_engineering_project_spotify_app_spark.operators.clusters import (
         _CLUSTERS_CTES,
     )
 
     return _FUNNEL_ORACLE_TEMPLATE.format(
-        clusters_ctes=_CLUSTERS_CTES, floor=LENGTH_FLOOR_CHARS
+        clusters_ctes=_CLUSTERS_CTES,
+        floor=LENGTH_FLOOR_CHARS,
+        keys="".join(f"{k}, " for k in keys),
     )
 
 
-def _ek_cc_arms(spark: SparkSession, sf_dir: str):
-    """The funnel's two stage arms: the exact-dup keep table and the
-    ONE shared CC labeling.
-
-    Overlapping them from a driver thread (guide §2.6 — pin ek, submit
-    its materialization on an InheritableThread while the CC driver
-    loop runs, join before returning) was implemented and MEASURED r15:
-    q_curation_funnel min-of-4 2.178 -> 2.168 s (a wash on mins) with
-    WORSE run-to-run samples (2.74/2.84/2.87 vs 2.35/2.20/2.18) —
-    reverted. Mechanism: the ek subtree already builds CONCURRENTLY
-    inside the final join's broadcast-build stages, so the thread only
-    moved it ahead of the CC loop and added a checkpoint
-    materialization barrier (the r14 pin-vs-parallel-stages lesson,
-    OPTIMIZATION_r14.md §5, applied to driver threads). The serialized
-    stage cost VERDICT r14 item 6 hoped to reclaim was already being
-    reclaimed by the scheduler.
-    """
+def _funnel(spark: SparkSession, sf_dir: str, *keys: str) -> DataFrame:
+    """The curation funnel's first-drop attribution, grouped by
+    ``keys`` + stage (see q_curation_funnel)."""
     from data_engineering_project_spotify_app_spark.operators.clusters import (
+        keep_best_from_cc,
         q_dedup_clusters,
     )
     from data_engineering_project_spotify_app_spark.operators.dedup import (
         q_dedup_exact,
     )
 
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", *keys, "n_chars", F.md5("text").alias("h")
+    )
     ek = q_dedup_exact(spark, sf_dir).select(
         F.col("text_hash").alias("h"), F.col("keep_id").alias("ekeep")
     )
+    # ONE CC run shared by the membership join and the keep-best
+    # derivation — calling q_dedup_keep_best here would re-run the whole
+    # candidate-pair + connected-components pipeline (a driver-side
+    # loop of separate jobs Catalyst cannot deduplicate) a second time.
     cc = q_dedup_clusters(spark, sf_dir)
-    return ek, cc
+    dl = table(spark, sf_dir, "documents").select(
+        "doc_id", F.length("text").alias("len")
+    )
+    nk = keep_best_from_cc(cc, dl).select(
+        "cluster_id", F.col("keep_id").alias("nkeep")
+    )
+    stage = (
+        F.when(F.col("n_chars") < LENGTH_FLOOR_CHARS, F.lit("length"))
+        .when(F.col("doc_id") != F.col("ekeep"), F.lit("exact_dup"))
+        .when(F.col("doc_id") != F.col("nkeep"), F.lit("near_dup"))
+        .otherwise(F.lit("kept"))
+    )
+    return (
+        d.join(ek, "h")
+        .join(cc, "doc_id")
+        .join(nk, "cluster_id")
+        .select(*keys, stage.alias("stage"), "n_chars")
+        .groupBy(*keys, "stage")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_chars").alias("n_chars"),
+        )
+    )
 
 
 @query("q_curation_funnel", oracle=_funnel_oracle())
@@ -451,41 +469,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     are corpus-bounded, so their joins are ordinary co-partitioned
     equi-joins at 100 TB (no broadcast hints), keyed on doc_id/hash.
     """
-    from data_engineering_project_spotify_app_spark.operators.clusters import (
-        keep_best_from_cc,
-    )
-
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id", "n_chars", F.md5("text").alias("h")
-    )
-    # ONE CC run shared by the membership join and the keep-best
-    # derivation — calling q_dedup_keep_best here would re-run the whole
-    # candidate-pair + connected-components pipeline (a driver-side
-    # loop of separate jobs Catalyst cannot deduplicate) a second time.
-    ek, cc = _ek_cc_arms(spark, sf_dir)
-    dl = table(spark, sf_dir, "documents").select(
-        "doc_id", F.length("text").alias("len")
-    )
-    nk = keep_best_from_cc(cc, dl).select(
-        "cluster_id", F.col("keep_id").alias("nkeep")
-    )
-    stage = (
-        F.when(F.col("n_chars") < LENGTH_FLOOR_CHARS, F.lit("length"))
-        .when(F.col("doc_id") != F.col("ekeep"), F.lit("exact_dup"))
-        .when(F.col("doc_id") != F.col("nkeep"), F.lit("near_dup"))
-        .otherwise(F.lit("kept"))
-    )
-    return (
-        d.join(ek, "h")
-        .join(cc, "doc_id")
-        .join(nk, "cluster_id")
-        .select(stage.alias("stage"), "n_chars")
-        .groupBy("stage")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("n_chars"),
-        )
-    )
+    return _funnel(spark, sf_dir)
 
 
 _DUP_INFLATION_ORACLE = """
@@ -544,48 +528,7 @@ def q_dup_inflation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _funnel_by_source_oracle() -> str:
-    from data_engineering_project_spotify_app_spark.operators.clusters import (
-        _CLUSTERS_CTES,
-    )
-
-    return f"""
-    WITH RECURSIVE {_CLUSTERS_CTES},
-    exact_keep AS (
-      SELECT md5(text) AS h, min(doc_id) AS keep_id
-      FROM documents GROUP BY 1
-    ),
-    near_keep AS (
-      SELECT cluster_id, doc_id AS keep_id FROM (
-        SELECT cc.cluster_id, d.doc_id,
-               row_number() OVER (
-                 PARTITION BY cc.cluster_id
-                 ORDER BY length(d.text) DESC, d.doc_id
-               ) AS rn
-        FROM cc JOIN documents d ON d.doc_id = cc.doc_id
-      ) WHERE rn = 1
-    ),
-    staged AS (
-      SELECT d.source, d.doc_id, d.n_chars,
-             CASE
-               WHEN d.n_chars < {LENGTH_FLOOR_CHARS} THEN 'length'
-               WHEN d.doc_id <> ek.keep_id THEN 'exact_dup'
-               WHEN d.doc_id <> nk.keep_id THEN 'near_dup'
-               ELSE 'kept'
-             END AS stage
-      FROM documents d
-      JOIN exact_keep ek ON ek.h = md5(d.text)
-      JOIN cc ON cc.doc_id = d.doc_id
-      JOIN near_keep nk ON nk.cluster_id = cc.cluster_id
-    )
-    SELECT source, stage,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS n_chars
-    FROM staged GROUP BY 1, 2
-    """
-
-
-@query("q_funnel_by_source", oracle=_funnel_by_source_oracle())
+@query("q_funnel_by_source", oracle=_funnel_oracle("source"))
 def q_funnel_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation funnel segmented by source: q_curation_funnel's
     first-drop attribution with a (source, stage) breakdown — which
@@ -597,39 +540,7 @@ def q_funnel_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames are shared registered operators over the landed signatures;
     source rides the document projection for free); output is bounded
     by sources × 4 stages."""
-    from data_engineering_project_spotify_app_spark.operators.clusters import (
-        keep_best_from_cc,
-    )
-
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars", F.md5("text").alias("h")
-    )
-    # ONE CC run shared by membership + keep-best (see q_curation_funnel;
-    # the thread-overlap experiment and its revert live in _ek_cc_arms)
-    ek, cc = _ek_cc_arms(spark, sf_dir)
-    dl = table(spark, sf_dir, "documents").select(
-        "doc_id", F.length("text").alias("len")
-    )
-    nk = keep_best_from_cc(cc, dl).select(
-        "cluster_id", F.col("keep_id").alias("nkeep")
-    )
-    stage = (
-        F.when(F.col("n_chars") < LENGTH_FLOOR_CHARS, F.lit("length"))
-        .when(F.col("doc_id") != F.col("ekeep"), F.lit("exact_dup"))
-        .when(F.col("doc_id") != F.col("nkeep"), F.lit("near_dup"))
-        .otherwise(F.lit("kept"))
-    )
-    return (
-        d.join(ek, "h")
-        .join(cc, "doc_id")
-        .join(nk, "cluster_id")
-        .select("source", stage.alias("stage"), "n_chars")
-        .groupBy("source", "stage")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("n_chars"),
-        )
-    )
+    return _funnel(spark, sf_dir, "source")
 
 
 def _lang_purity_oracle() -> str:

@@ -1,10 +1,10 @@
-"""TPC-H-style analytical queries — the engine's headline bench set.
+"""TPC-H-style analytical queries — the engine's declared analytics set.
 
 The reference delegates all analytics to BigQuery (SURVEY.md §1, §3 entry
 point 2); these queries are the engine's equivalent declared analytics
 surface over the landed tables, phrased on the driver's TPC-H-ish
 fixtures (TESTDATA.md). They exercise the full scan→join→agg→window
-stack and are what bench.py times.
+stack.
 
 Scale notes per query are inline; the common posture:
 - fixed dims (region, nation) broadcast always;

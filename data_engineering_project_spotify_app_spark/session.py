@@ -95,23 +95,13 @@ def get_spark(
         #   numShufflePartitions). An under-estimated build side (e.g.
         #   behind a selective-looking filter or a UDF) can OOM an
         #   executor at scale where SMJ would have spilled — SHJ's build
-        #   hash map does not spill. The r15 audit of every static
-        #   conversion in the registry (OPTIMIZATION_r15.md §SHJ) found
-        #   each build side is either a bare scan projection (estimate
-        #   tracks actual, so the conversion self-disables as the table
-        #   grows) or a stats-less localCheckpoint RDD on the STREAM
-        #   side only; no unbounded-cardinality frame is ever the build
-        #   side. If a deployment hits the estimate-miss mode anyway,
-        #   SPARK_GRAFT_PREFER_SMJ=true restores sort-merge without a
-        #   code change (AQE skew-join stays on either way).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "64m"),
-        )
+        #   hash map does not spill. Both are runtime SQL confs: a
+        #   deployment that hits the estimate-miss mode restores
+        #   sort-merge with spark.conf.set(
+        #   "spark.sql.join.preferSortMergeJoin", "true") or the same
+        #   key in extra_conf (AQE skew-join stays on either way).
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "zstd")
         # fixture events.parquet stores TIMESTAMP(NANOS); read as long and

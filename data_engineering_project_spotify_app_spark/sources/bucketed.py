@@ -632,7 +632,7 @@ def invalidate_landings(
 # previous landing), so they must run in this order; everything else is
 # independent. Kept here, next to the locks that make concurrent builds
 # safe, as the single source of truth for "what are the shared landings"
-# (bench.py and scripts/full_sweep.py both consume this list).
+# (scripts/full_sweep.py consumes this list).
 _CHAIN_LANDINGS = ("part_baskets", "copurchase_edges", "oriented_adjacency")
 
 
@@ -675,12 +675,10 @@ def build_all_landings(
 
     Returns name → seconds. NOTE these are per-task wall times that
     OVERLAP under concurrency — they attribute relative cost but do not
-    sum to the elapsed wall. bench.py deliberately does NOT use this:
-    its serial per-landing timing is the disclosure protocol for
-    BENCH_QUERIES.json's landings_sec; this is for cold CORRECTNESS
-    paths (full_sweep, driver-style gates) where only total wall
-    matters. A failed build propagates after all tasks settle (a
-    landing failure is never recoverable by its consumers)."""
+    sum to the elapsed wall. This is for cold CORRECTNESS paths
+    (full_sweep, driver-style gates) where only total wall matters. A
+    failed build propagates after all tasks settle (a landing failure
+    is never recoverable by its consumers)."""
     import concurrent.futures as cf
     import time as _time
 

@@ -1,13 +1,14 @@
 #!/usr/bin/env python
 """One-shot timing sweep of EVERY registered query at a given SF.
 
-The correctness gate runs at sf0.01 and the bench headline set covers
-~half the registry per round — this sweep is the safety net for the
-rest: it times (and smoke-runs) every registered query once at the
-bench SF, so an sf0.1-only crash or a pathological plan in the
-unbenched half surfaces immediately instead of whenever the rotation
-window reaches it. Round 9's sweep found both kinds on its first run
-(q_bfs_recursive recursion-limit crash, q_jaccard_prefix_join 37.8 s).
+The correctness gate runs at sf0.01 and perfbench times a fixed set of
+workloads — this sweep is the registry-wide safety net: it times (and
+smoke-runs) every registered query once at the given SF, so an
+sf0.1-only crash or a pathological plan surfaces immediately.
+
+Each query runs as a ``noop``-sink write, the same action perfbench
+times: every output column is materialized, so column pruning cannot
+skip work that a ``count()`` would never ask for.
 
 Single-run timings are ±30% noisy on this box — treat anything under
 ~2× of its family's norm as noise and only chase real outliers.
@@ -34,6 +35,10 @@ from data_engineering_project_spotify_app_spark.session import (  # noqa: E402
 )
 
 
+def _run(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     threshold = float(sys.argv[2]) if len(sys.argv) > 2 else 3.0
@@ -43,15 +48,15 @@ def main() -> None:
     # warm pass at the smallest SF amortizes JVM/codegen cost
     for n in names:
         try:
-            registry.QUERIES[n](spark, "/root/testdata/sf0.001").count()
+            _run(registry.QUERIES[n](spark, "/root/testdata/sf0.001"))
         except Exception as e:
             print(f"WARM FAIL {n}: {type(e).__name__}")
     # pre-register the shared landings CONCURRENTLY (VERDICT r13 item
     # 1): without this the build cost lands inside whichever consumer
     # touches each landing first and reads as a false slow-query
     # outlier in the sweep report. The sweep only needs them built —
-    # per-landing timing disclosure is bench.py's job — so the
-    # concurrent cold path is the right form here.
+    # per-landing timing is perfbench's job — so the concurrent cold
+    # path is the right form here.
     from data_engineering_project_spotify_app_spark.sources.bucketed import (
         build_all_landings,
     )
@@ -70,7 +75,7 @@ def main() -> None:
     for n in names:
         t0 = time.perf_counter()
         try:
-            registry.QUERIES[n](spark, sf_dir).count()
+            _run(registry.QUERIES[n](spark, sf_dir))
             out[n] = round(time.perf_counter() - t0, 2)
         except Exception as e:
             out[n] = f"ERR {type(e).__name__}"

@@ -24,7 +24,7 @@ output size, not the algorithm. Disjoint shards are built per table:
 
 The probed queries are the REGISTERED entries, run end-to-end at a 1x
 sf_dir vs the materialized Mx dir (landings built in the warm pass,
-same amortization as bench.py). Linear scaling ⇒ ratio ≈ M on a
+so the timed pass excludes their one-time cost). Linear scaling ⇒ ratio ≈ M on a
 saturated box, < M while 1x leaves cores idle; a super-linear stage
 shows up as ratio >> M.
 

@@ -262,6 +262,68 @@ def test_scd2_fold_is_chunk_order_independent():
         assert state == base_state, chunking
 
 
+def test_session_fold_rearms_on_extension_and_closes_at_extended_end():
+    """A late event extends an open session: the fold must move the
+    event-time alarm to the NEW end + gap, and the timeout must emit the
+    session with its extended bounds and count. Drives _session_fn
+    directly with a fake GroupState and a scripted watermark."""
+    import pandas as pd
+
+    from data_engineering_project_spotify_app_spark.streaming.stateful import (
+        _session_fn,
+    )
+
+    class FakeState:
+        def __init__(self):
+            self.exists, self._v = False, None
+            self.hasTimedOut, self.timeout_ms = False, None
+
+        @property
+        def get(self):
+            return self._v
+
+        def update(self, v):
+            self._v, self.exists = v, True
+
+        def remove(self):
+            self.exists, self._v, self.timeout_ms = False, None, None
+
+        def setTimeoutTimestamp(self, ms):
+            self.timeout_ms = ms
+
+    def batch(ms):
+        return pd.DataFrame({"ts": pd.to_datetime(ms, unit="ms")})
+
+    fold = _session_fn(1_000)
+    st = FakeState()
+    closed = []
+
+    def fire(watermark_ms):
+        if st.exists and st.timeout_ms <= watermark_ms:
+            st.hasTimedOut = True
+            closed.extend(fold((1,), [], st))
+            st.hasTimedOut = False
+
+    list(fold((1,), [batch([1_000, 1_400])], st))
+    assert st.timeout_ms == 2_400
+    list(fold((1,), [batch([2_000])], st))  # extends before the alarm
+    assert st.timeout_ms == 3_000
+    fire(2_500)  # past the first alarm, not the re-armed one
+    assert closed == []
+    fire(3_500)
+    list(fold((1,), [batch([5_000])], st))  # a new session after close
+    fire(7_000)
+
+    rows = [
+        (r.session_start.value // 1_000_000, r.session_end.value // 1_000_000,
+         r.n_events)
+        for pdf in closed
+        for r in pdf.itertuples(index=False)
+    ]
+    assert rows == [(1_000, 2_000, 3), (5_000, 5_000, 1)]
+    assert not st.exists
+
+
 def test_corpus_filter_stream_matches_batch_decisions(spark, tmp_path):
     """Streaming curation funnel == q_corpus_filter's batch decisions
     when arrival order follows doc_id (the batch keeper rule)."""
