@@ -9,7 +9,8 @@ surveyed in SURVEY.md), re-expressed Spark-first:
 - the reference's BigQuery relational surface (schemas, NDJSON load,
   overwrite-replace) as schema'd Spark reads/writes (``sources/``);
 - the full reference pipeline (search→paginate→dedup→enrich→inject→sink,
-  app.py:133–220) as one lazy DataFrame DAG (``plans/pipeline.py``);
+  app.py:133–220): the point lookup resolved once, then literal-set
+  filters over the entity tables (``plans/pipeline.py``);
 - LLM-training-data extensions: dedup (exact/MinHash-LSH/SimHash/Jaccard),
   embedding similarity search, text analysis, multimodal column plumbing
   (``operators/``);

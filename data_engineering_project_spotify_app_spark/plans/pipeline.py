@@ -1,4 +1,5 @@
-"""The reference's full ETL pipeline as ONE lazy DataFrame DAG.
+"""The reference's full ETL pipeline: point lookup resolved once, then
+literal-set filters.
 
 ``run_full_etl_process`` (app.py:133–220) hard-codes a physical plan:
 
@@ -12,11 +13,14 @@
     → upload JSON per entity (201–211)
     → summary counts (213–220)
 
-Here the same dataflow is declared once over entity DataFrames and
-Catalyst/AQE choose the physical strategy (SURVEY.md §3): its four
-hand-rolled ThreadPoolExecutor barriers become shuffle stage boundaries,
-its `total`-probe fan-out sizing becomes AQE, its thread/semaphore
-tuning becomes executor/partition config (session.py).
+Here the request resolves its two small driver-side values once, as the
+reference does: the matched artist and the set of its album ids (one job
+each). Everything else is declared over the entity DataFrames with those
+values as literals, so the parquet scans can push the ``IN`` filters
+down and the request's actions plan no join: the rest of the work is
+planned from values observed at run time (Shark, SIGMOD'13), and its
+hand-rolled ThreadPoolExecutor barriers become Spark stages, sized by
+AQE and the executor/partition config (session.py, SURVEY.md §3).
 
 Inputs are the landed entity tables (any source: load_all_entities over
 staging NDJSON, fixture parquet, or live-API snapshots — the transport
@@ -36,8 +40,8 @@ class EtlResult:
     """Pipeline outputs: the enriched frames + the summary frame.
 
     ``summary`` is the 1-row equivalent of the reference's response dict
-    (app.py:216–220): artist name, albums_found, albums_stored,
-    tracks_stored.
+    (app.py:216–220): artist name, albums_stored, tracks_stored; it has
+    no row when the search misses.
     """
 
     artist: DataFrame
@@ -52,19 +56,24 @@ def artist_etl(
     tracks: DataFrame,
     artist_name: str,
 ) -> EtlResult:
-    """The reference pipeline for one artist, as a declarative DAG.
+    """The reference pipeline for one artist.
+
+    Building the result runs the point lookup (one job on a miss, two on
+    a hit); the returned frames are lazy.
 
     Stage mapping (reference → here):
     - S1 search+limit1 (app.py:140–145): name-contains filter, best
       (here: lowest-id) match first — deterministic where the API's
-      relevance order was not.
-    - S4 child scan (152–163, 183–189): albums/tracks arrive as child
-      tables joined on the parent key — the REST pagination disappears.
-    - A1 dedup (164): dropDuplicates on the id before enrichment.
-    - J1 batch enrich (167–177, 192–199): key-set inner join back to the
-      full entity rows.
-    - J2 parent inject (README.md:18): each track carries album_id.
-    - A3 summary (216–220): counts grouped by entity type.
+      relevance order was not. ``artist`` is this lazy frame; its first
+      row is fetched once.
+    - S4+A1 album scan and id set (152–164): the ids of the albums whose
+      nested ``artists`` array holds the hit (albums_schema.json:81–99),
+      collected into a Python set, as the reference keeps it at 164.
+    - J1 batch enrich (167–177, 192–199): a literal ``IN`` filter on the
+      full entity rows, pushed down to the scan — no join.
+    - J2 parent inject (README.md:18): each track carries album_id from
+      its embedded album struct (tracks_schema.json:107–170).
+    - A3 summary (216–220): one global aggregate over both entities.
     """
     # S1/L1: search scan with predicate + limit 1
     matched = (
@@ -72,60 +81,33 @@ def artist_etl(
         .orderBy("id")
         .limit(1)
     )
+    hit = matched.first()
 
-    # S4: all albums of the matched artist (the paginated album scan);
-    # membership via explode of the album's artist array (albums carry
-    # their artists nested — albums_schema.json:81–99)
-    album_artist = albums.select(
-        F.col("id").alias("album_id"),
-        F.explode("artists").alias("album_artist"),
-    ).select("album_id", F.col("album_artist.id").alias("artist_id"))
+    # S4/A1: the album-id set (an album lists the artist once per role;
+    # the set dedups it, as set() does at app.py:164)
+    ids = []
+    if hit is not None:
+        rows = albums.filter(F.exists("artists", lambda a: a["id"] == hit["id"]))
+        ids = sorted({r["id"] for r in rows.select("id").collect()} - {None})
 
-    matched_ids = matched.select(F.col("id").alias("artist_id"))
-    # A1: dedup album ids (an album lists the artist once per role page;
-    # the reference dedups with set() at app.py:164)
-    album_ids = (
-        album_artist.join(F.broadcast(matched_ids), "artist_id")
-        .select("album_id")
-        .dropDuplicates(["album_id"])
+    # J1/J2 + P2: literal-set enrichment with the null-id guard before
+    # the sink (app.py:188, 205–206); a null id never matches the set
+    valid_albums = albums.filter(F.col("id").isin(ids))
+    valid_tracks = tracks.withColumn("album_id", F.col("album.id")).filter(
+        F.col("album_id").isin(ids) & F.col("id").isNotNull()
     )
 
-    # J1: batch enrichment == key-set inner join back to full rows
-    enriched_albums = albums.join(
-        F.broadcast(album_ids), albums.id == album_ids.album_id, "left_semi"
-    )
-
-    # S4 + J2: child tracks with the parent album key injected; tracks
-    # embed their album struct (tracks_schema.json:107–170)
-    artist_tracks = tracks.withColumn(
-        "album_id", F.col("album.id")
-    ).join(
-        F.broadcast(album_ids),
-        "album_id",
-        "left_semi",
-    )
-
-    # P2: null-id guard before the sink (app.py:188, 205–206)
-    valid_albums = enriched_albums.filter(F.col("id").isNotNull())
-    valid_tracks = artist_tracks.filter(F.col("id").isNotNull())
-
-    # A2/A3: the summary row (counts per entity type, app.py:216–220)
-    counts = (
-        valid_albums.select(F.lit("album").alias("entity"))
-        .unionByName(valid_tracks.select(F.lit("track").alias("entity")))
-        .groupBy("entity")
-        .agg(F.count("*").alias("n"))
-    )
+    # A2/A3: the summary row. On a miss the false filter folds the plan
+    # to an empty LocalRelation, so summary.first() runs no job.
     summary = (
-        matched.select(F.col("name").alias("artist_name"))
-        .crossJoin(
-            counts.groupBy().pivot("entity", ["album", "track"]).sum("n")
+        valid_albums.select(F.lit(True).alias("is_album"))
+        .unionByName(valid_tracks.select(F.lit(False).alias("is_album")))
+        .agg(
+            F.lit(hit["name"] if hit else "").alias("artist_name"),
+            F.count_if("is_album").alias("albums_stored"),
+            F.count_if(~F.col("is_album")).alias("tracks_stored"),
         )
-        .select(
-            "artist_name",
-            F.coalesce(F.col("album"), F.lit(0)).alias("albums_stored"),
-            F.coalesce(F.col("track"), F.lit(0)).alias("tracks_stored"),
-        )
+        .filter(F.lit(hit is not None))
     )
     return EtlResult(
         artist=matched,

@@ -89,14 +89,15 @@ def load_entity(
     load-time schema check (a row that can't cast fails the job, not
     silently corrupts). REPEATED fields are coalesced to empty arrays
     (BQ semantics, SURVEY.md §1.3). ``--replace`` maps to
-    ``mode("overwrite")``.
+    ``mode("overwrite")``. The table is read back with the schema just
+    written, which skips the footer-reading job of schema inference.
     """
     schema = ENTITY_SCHEMAS[entity]
     df = spark.read.schema(schema).json(f"{staging_dir}/{entity}")
     df = coalesce_repeated(df, schema)
     target = f"{warehouse_dir}/{entity}"
     df.write.mode("overwrite").parquet(target)
-    return spark.read.parquet(target)
+    return spark.read.schema(df.schema).parquet(target)
 
 
 def load_entity_quarantine(
@@ -118,7 +119,9 @@ def load_entity_quarantine(
 
     One pass over the staging files; the split is two filters over the
     same cached read (corrupt rows are the rare side, so the second
-    scan is cheap and keeps the path declarative).
+    scan is cheap and keeps the path declarative). As in
+    ``load_entity``, the clean table is read back with the schema just
+    written, without an inference job.
     """
     from pyspark.sql import types as T
 
@@ -144,14 +147,15 @@ def load_entity_quarantine(
         df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record"),
         schema,
     )
-    clean.write.mode("overwrite").parquet(f"{warehouse_dir}/{entity}")
+    target = f"{warehouse_dir}/{entity}"
+    clean.write.mode("overwrite").parquet(target)
     bad.write.mode("overwrite").json(f"{warehouse_dir}/{entity}__quarantine")
     quarantined = spark.read.json(
         f"{warehouse_dir}/{entity}__quarantine",
         schema="raw string",
     )
     df.unpersist()  # both sinks are durable; drop the split cache
-    return (spark.read.parquet(f"{warehouse_dir}/{entity}"), quarantined)
+    return (spark.read.schema(clean.schema).parquet(target), quarantined)
 
 
 def load_all_entities(

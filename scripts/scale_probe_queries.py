@@ -24,9 +24,11 @@ output size, not the algorithm. Disjoint shards are built per table:
 
 The probed queries are the REGISTERED entries, run end-to-end at a 1x
 sf_dir vs the materialized Mx dir (landings built in the warm pass,
-so the timed pass excludes their one-time cost). Linear scaling ⇒ ratio ≈ M on a
-saturated box, < M while 1x leaves cores idle; a super-linear stage
-shows up as ratio >> M.
+so the timed pass excludes their one-time cost). Each run is a
+``noop``-sink write, the action perfbench times: a ``count()`` would let
+column pruning skip every column it does not need. Linear scaling ⇒
+ratio ≈ M on a saturated box, < M while 1x leaves cores idle; a
+super-linear stage shows up as ratio >> M.
 
 Usage: python scripts/scale_probe_queries.py [M] [sf_dir] [only-substr]
 """
@@ -134,6 +136,10 @@ def materialize_mx(spark, sf_dir: str, m: int) -> str:
     return out
 
 
+def _run(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
 def best_of(n, fn, spark) -> float:
     best = 1e18
     for _ in range(n):
@@ -158,10 +164,10 @@ def main() -> None:
         if only and only not in name:
             continue
         fn = registry.QUERIES[name]
-        fn(spark, sf_dir).count()  # warm: landings + codegen
-        t1 = best_of(2, lambda f=fn: f(spark, sf_dir).count(), spark)
-        fn(spark, mx).count()  # warm Mx: build the Mx landings
-        tm = best_of(2, lambda f=fn: f(spark, mx).count(), spark)
+        _run(fn(spark, sf_dir))  # warm: landings + codegen
+        t1 = best_of(2, lambda f=fn: _run(f(spark, sf_dir)), spark)
+        _run(fn(spark, mx))  # warm Mx: build the Mx landings
+        tm = best_of(2, lambda f=fn: _run(f(spark, mx)), spark)
         print(
             f"{name:24s} 1x {t1:6.2f}s   {m}x {tm:6.2f}s   "
             f"ratio {tm / max(t1, 1e-9):5.1f}"

@@ -238,3 +238,24 @@ def test_compact_entity_preserves_rows_and_shrinks_files(spark, tmp_path):
     parts = glob.glob(f"{d}/part-*.json")
     assert len(parts) == 2, parts
     assert not glob.glob(f"{tmp_path}/staging/artists__*")
+
+
+def test_loaded_tables_read_back_with_the_inferred_schema(spark, tmp_path):
+    """Both loads return the table read with the schema they just wrote
+    (no schema-inference job); it must equal the schema Spark infers
+    from the parquet footers, so no consumer sees a different frame."""
+    from data_engineering_project_spotify_app_spark.sources.ingest import (
+        load_entity_quarantine,
+    )
+
+    artists, albums_, tracks_ = build_catalog(n_artists=2, albums_per_artist=1)
+    staging = str(tmp_path / "staging")
+    write_staging(staging, artists, albums_, tracks_)
+    warehouse = str(tmp_path / "wh")
+    rows = {"artists": artists, "albums": albums_, "tracks": tracks_}
+    for load in (load_entity, lambda *a: load_entity_quarantine(*a)[0]):
+        for entity, staged in rows.items():
+            loaded = load(spark, staging, entity, warehouse)
+            inferred = spark.read.parquet(f"{warehouse}/{entity}").schema
+            assert loaded.schema == inferred, entity
+            assert loaded.count() == len(staged)
