@@ -37,24 +37,40 @@ def normalize(col: Column) -> Column:
 NORMALIZE_SQL = "trim(regexp_replace(lower({col}), '[^a-z0-9]+', ' ', 'g'))"
 
 
-def word_bigrams(tok: Column) -> Column:
-    """Distinct word-bigram shingles from a token array → array<string>.
+def adjacent_pairs(tok: Column | str, combine) -> Column:
+    """``combine(tok[i], tok[i + 1])`` for every adjacent pair of a token
+    array → array; empty when the array has fewer than 2 tokens.
+    ``combine`` is a two-argument Column function, e.g. ``bigram_str``
+    or ``bigram_struct``.
 
-    Empty when the doc has fewer than 2 tokens.
-
-    Implementation note: built with zip_with over two slices — a constant
-    number of references to ``tok``. A transform(sequence(...)) with
+    Built with zip_with over two slices — a constant number of
+    references to ``tok``. A transform(sequence(...)) with
     element_at(tok, i) per index re-evaluates the *whole* tok expression
     per element once ProjectCollapsing inlines it (tokenizer regex × ~2N
     per row — measured 10× slowdown on the dedup path).
     """
-    n = F.size(tok)
-    heads = F.slice(tok, 1, F.greatest(n - 1, F.lit(0)))
-    tails = F.slice(tok, 2, F.greatest(n - 1, F.lit(0)))
-    grams = F.zip_with(heads, tails, lambda x, y: F.concat_ws(" ", x, y))
-    return F.when(n >= 2, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
+    m = F.greatest(F.size(tok) - 1, F.lit(0))
+    return F.zip_with(F.slice(tok, 1, m), F.slice(tok, 2, m), combine)
+
+
+def bigram_str(x: Column, y: Column) -> Column:
+    """The bigram as one shingle string, ``"w1 w2"``."""
+    return F.concat_ws(" ", x, y)
+
+
+def bigram_struct(x: Column, y: Column) -> Column:
+    """The bigram as ``struct(w1, w2)``, for joins on either word."""
+    return F.struct(x.alias("w1"), y.alias("w2"))
+
+
+def word_bigrams(tok: Column) -> Column:
+    """Distinct word-bigram shingles from a token array → array<string>.
+
+    Empty when the doc has fewer than 2 tokens.
+    """
+    return F.when(
+        F.size(tok) >= 2, F.array_distinct(adjacent_pairs(tok, bigram_str))
+    ).otherwise(F.array().cast("array<string>"))
 
 
 def word_bigrams_multiset(tok: Column) -> Column:
@@ -67,10 +83,7 @@ def word_bigrams_multiset(tok: Column) -> Column:
     reduction in shingle count. Jaccard-style set semantics must keep
     ``word_bigrams``.
     """
-    n = F.size(tok)
-    heads = F.slice(tok, 1, F.greatest(n - 1, F.lit(0)))
-    tails = F.slice(tok, 2, F.greatest(n - 1, F.lit(0)))
-    return F.zip_with(heads, tails, lambda x, y: F.concat_ws(" ", x, y))
+    return adjacent_pairs(tok, bigram_str)
 
 
 # DuckDB twin of word_bigrams() — substitute {tok} (a list expression).
@@ -85,7 +98,7 @@ BIGRAMS_SQL = (
 def word_ngrams(tok: Column, n: int) -> Column:
     """Distinct word n-gram shingles from a token array → array<string>.
 
-    Same constant-reference discipline as ``word_bigrams``: n slices of
+    Same constant-reference discipline as ``adjacent_pairs``: n slices of
     the (materialized) token array folded with zip_with, never a
     transform(sequence) + element_at(tok, i) chain — the latter
     re-evaluates the token expression per element after ProjectCollapsing
@@ -97,9 +110,7 @@ def word_ngrams(tok: Column, n: int) -> Column:
     m = F.greatest(sz - (n - 1), F.lit(0))
     grams = F.slice(tok, 1, m)
     for k in range(2, n + 1):
-        grams = F.zip_with(
-            grams, F.slice(tok, k, m), lambda x, y: F.concat_ws(" ", x, y)
-        )
+        grams = F.zip_with(grams, F.slice(tok, k, m), bigram_str)
     return F.when(sz >= n, F.array_distinct(grams)).otherwise(
         F.array().cast("array<string>")
     )

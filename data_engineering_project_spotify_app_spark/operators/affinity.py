@@ -33,6 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineering_project_spotify_app_spark.functions.pairs import (
+    sorted_pairs,
+)
 from data_engineering_project_spotify_app_spark.operators.pinutil import pinned
 from data_engineering_project_spotify_app_spark.operators.registry import query
 from data_engineering_project_spotify_app_spark.tables import table
@@ -97,21 +100,15 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.collect_set("brand").alias("bs")
     ).localCheckpoint(eager=False)
 
-    # UNDIRECTED pairs inside codegen (a < b via the sorted-array slice
-    # idiom), mirrored to directed AFTER aggregation: co-occurrence
-    # counts are orientation-symmetric (pair_n(a→b) = pair_n(b→a) = the
+    # UNDIRECTED pairs inside codegen (a < b via sorted_pairs), mirrored
+    # to directed AFTER aggregation: co-occurrence counts are
+    # orientation-symmetric (pair_n(a→b) = pair_n(b→a) = the
     # number of baskets holding both), so exploding k² directed pairs
     # per basket shuffled twice the rows for information the ≤
     # |brands|²/2-row aggregate already holds. Halves the explode
     # fan-out and the pair shuffle (guide §2.3: shuffle fewer bytes);
     # the mirror union runs on the aggregated frame (tiny).
-    pair = F.explode(
-        F.expr(
-            "flatten(transform(bss, (x, i) -> "
-            "transform(slice(bss, i + 2, size(bss) - i - 1), "
-            "y -> struct(x AS a, y AS b))))"
-        )
-    )
+    pair = F.explode(sorted_pairs("bss", "a", "b"))
     upairs = (
         baskets.select(F.array_sort("bs").alias("bss"))
         .select(pair.alias("pr"))

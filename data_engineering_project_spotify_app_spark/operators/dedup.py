@@ -27,6 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_engineering_project_spotify_app_spark.functions.pairs import (
+    sorted_pairs,
+)
 from data_engineering_project_spotify_app_spark.functions.text import (
     BIGRAMS_SQL,
     TOKENS_SQL,
@@ -63,6 +66,16 @@ def _auto_cap(n_rows: F.Column) -> F.Column:
     return F.greatest(
         F.lit(CAP_FLOOR), F.floor(n_rows / CAP_DIVISOR)
     ).cast("bigint")
+
+
+def _cap_buckets(buckets: DataFrame, arr: str, cap: DataFrame) -> DataFrame:
+    """Drop the buckets whose ``arr`` holds more members than the one
+    value of the 1-row ``cap`` frame (usually ``_auto_cap`` of a row
+    count), broadcast as a scalar so the cap stays in-plan."""
+    (cap_col,) = cap.columns
+    return buckets.crossJoin(F.broadcast(cap)).filter(
+        F.size(arr) <= F.col(cap_col)
+    )
 
 
 @query(
@@ -167,8 +180,8 @@ def ngram_jaccard_pairs(
     )
     # Candidate pairs by bucket-collect, not a shingle self-join: group on
     # the (shard, shingle) key, collect the (sorted, hence doc_a < doc_b)
-    # doc list per bucket, and generate the C(k,2) pairs with built-in
-    # array HOFs. Same pairs as the θ-self-join, but ONE shuffle of the
+    # doc list per bucket, and generate the C(k,2) pairs with
+    # sorted_pairs. Same pairs as the θ-self-join, but ONE shuffle of the
     # shingle table instead of two join sides, and no recompute diamond
     # (the round-1 version needed a localCheckpoint to stop the
     # tokenize→shingle lineage running twice). Per-doc shingles are
@@ -188,22 +201,17 @@ def ngram_jaccard_pairs(
     )
     if df_cap == "auto":
         cap = grams.agg(_auto_cap(F.count("*")).alias("df_cap"))
-        buckets = buckets.crossJoin(F.broadcast(cap)).filter(
-            F.size("ds") <= F.col("df_cap")
-        )
+        buckets = _cap_buckets(buckets, "ds", cap)
     elif df_cap is not None:
         buckets = buckets.filter(F.size("ds") <= df_cap)
-    pair = F.explode(
-        F.expr(
-            "flatten(transform(ds, (x, i) -> "
-            "transform(slice(ds, i + 2, size(ds) - i - 1), "
-            "y -> struct(x.doc_id AS doc_a, x.n AS na, "
-            "y.doc_id AS doc_b, y.n AS nb))))"
-        )
-    ).alias("pr")
     inter = (
-        buckets.select(pair)
-        .select("pr.doc_a", "pr.na", "pr.doc_b", "pr.nb")
+        buckets.select(F.explode(sorted_pairs("ds", "a", "b")).alias("pr"))
+        .select(
+            F.col("pr.a.doc_id").alias("doc_a"),
+            F.col("pr.a.n").alias("na"),
+            F.col("pr.b.doc_id").alias("doc_b"),
+            F.col("pr.b.n").alias("nb"),
+        )
         .groupBy("doc_a", "doc_b")
         .agg(
             F.count("*").alias("n_common"),
@@ -548,9 +556,9 @@ def minhash_candidate_pairs_df(
     counted from ``cap_df`` (pass the raw docs frame — counting ``sig``
     itself would recompute the signature aggregation)."""
     bands = lsh_bands_df(sig)
-    # Candidate pairs by bucket-collect (see q_dedup_ngram_jaccard): group
-    # on the band key, collect the sorted doc list, generate C(k,2) pairs
-    # with array HOFs. Replaces the round-1 band self-join + its
+    # Candidate pairs by bucket-collect: group on the band key, collect
+    # the sorted doc list, generate C(k,2) pairs with sorted_pairs.
+    # Replaces the round-1 band self-join + its
     # localCheckpoint diamond — one shuffle of (band_key, doc_id) instead
     # of two join sides, and the signature aggregation runs exactly once.
     # Bucket skew (a degenerate band key) serializes one task; bucket_cap
@@ -565,19 +573,11 @@ def minhash_candidate_pairs_df(
         cap = (cap_df if cap_df is not None else sig).agg(
             _auto_cap(F.count("*")).alias("bucket_cap")
         )
-        buckets = buckets.crossJoin(F.broadcast(cap)).filter(
-            F.size("ids") <= F.col("bucket_cap")
-        )
+        buckets = _cap_buckets(buckets, "ids", cap)
     elif bucket_cap is not None:
         buckets = buckets.filter(F.size("ids") <= bucket_cap)
     pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ids, (x, i) -> "
-                "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                "y -> struct(x AS doc_a, y AS doc_b))))"
-            )
-        ).alias("pr")
+        F.explode(sorted_pairs("ids", "doc_a", "doc_b")).alias("pr")
     )
     return (
         pairs.select("pr.doc_a", "pr.doc_b")
@@ -666,39 +666,9 @@ def q_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stopped a triple recompute would now just copy the parquet into
     # executor block storage
     sig = _minhash_signatures(spark, sf_dir)
-
-    band_structs = []
-    for band in range(N_BANDS):
-        cols = [f"h{band * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)]
-        band_structs.append(
-            F.struct(
-                F.lit(band).alias("band"),
-                F.md5(
-                    F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-                ).alias("band_key"),
-            )
-        )
-    bands = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select("doc_id", "bk.band", "bk.band_key")
-    buckets = (
-        bands.groupBy("band", "band_key")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    cand = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x AS doc_a, y AS doc_b))))"
-                )
-            ).alias("pr")
-        )
-        .select("pr.doc_a", "pr.doc_b")
-        .distinct()
-    )
+    # the distinct candidate set: the unused n_bands_matched count is
+    # pruned, which leaves the same aggregate a distinct() plans
+    cand = minhash_candidate_pairs_df(sig).select("doc_a", "doc_b")
     a = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"h{i}").alias(f"ha{i}") for i in range(N_MINHASH)],
@@ -966,21 +936,17 @@ def simhash_hamming_pairs_df(
         .filter(F.size("ds") > 1)
     )
     if cap_df is not None:
-        buckets = buckets.crossJoin(F.broadcast(cap_df)).filter(
-            F.size("ds") <= F.col("bucket_cap")
-        )
+        buckets = _cap_buckets(buckets, "ds", cap_df)
     pairs = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) -> "
-                    "transform(slice(ds, i + 2, size(ds) - i - 1), "
-                    "y -> struct(x.doc_id AS doc_a, y.doc_id AS doc_b, "
-                    "x.hi AS ha, x.lo AS la, y.hi AS hb, y.lo AS lb))))"
-                )
-            ).alias("pr")
+        buckets.select(F.explode(sorted_pairs("ds", "a", "b")).alias("pr"))
+        .select(
+            F.col("pr.a.doc_id").alias("doc_a"),
+            F.col("pr.b.doc_id").alias("doc_b"),
+            F.col("pr.a.hi").alias("ha"),
+            F.col("pr.a.lo").alias("la"),
+            F.col("pr.b.hi").alias("hb"),
+            F.col("pr.b.lo").alias("lb"),
         )
-        .select("pr.*")
         .distinct()
     )
     hamming = (
@@ -1048,24 +1014,8 @@ def incremental_candidate_pairs_df(sig: DataFrame) -> DataFrame:
     h0..h15) — see q_incremental_dedup. DataFrame-level so the scale
     probe can compare it against the full pair generation on blown-up
     corpora."""
-    band_structs = []
-    for band in range(N_BANDS):
-        cols = [f"h{band * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)]
-        band_structs.append(
-            F.struct(
-                F.lit(band).alias("band"),
-                F.md5(
-                    F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-                ).alias("band_key"),
-            )
-        )
-    bands = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select(
-        "doc_id",
-        F.col("bk.band").alias("band"),
-        F.col("bk.band_key").alias("band_key"),
-        (F.pmod(F.col("doc_id"), F.lit(10)) < 2).alias("is_new"),
+    bands = lsh_bands_df(sig).withColumn(
+        "is_new", F.pmod(F.col("doc_id"), F.lit(10)) < 2
     )
     buckets = (
         bands.groupBy("band", "band_key")
@@ -1089,11 +1039,7 @@ def incremental_candidate_pairs_df(sig: DataFrame) -> DataFrame:
                     "transform(old_ids, y -> struct("
                     "least(x, y) AS doc_a, greatest(x, y) AS doc_b))))"
                 ),
-                F.expr(
-                    "flatten(transform(new_ids, (x, i) -> "
-                    "transform(slice(new_ids, i + 2, size(new_ids) - i - 1), "
-                    "y -> struct(x AS doc_a, y AS doc_b))))"
-                ),
+                sorted_pairs("new_ids", "doc_a", "doc_b"),
             )
         ).alias("pr")
     )
@@ -1473,19 +1419,15 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_sort(F.collect_list(F.struct("doc_id", "n"))).alias("ds")
         )
         .filter(F.size("ds") > 1)
-        .crossJoin(F.broadcast(cap))
-        .filter(F.size("ds") <= F.col("df_cap"))
     )
-    pairs = buckets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ds, (x, i) -> "
-                "transform(slice(ds, i + 2, size(ds) - i - 1), "
-                "y -> struct(x.doc_id AS doc_a, x.n AS n_a, "
-                "y.doc_id AS doc_b, y.n AS n_b))))"
-            )
-        ).alias("pr")
-    ).select("pr.*")
+    pairs = _cap_buckets(buckets, "ds", cap).select(
+        F.explode(sorted_pairs("ds", "a", "b")).alias("pr")
+    ).select(
+        F.col("pr.a.doc_id").alias("doc_a"),
+        F.col("pr.a.n").alias("n_a"),
+        F.col("pr.b.doc_id").alias("doc_b"),
+        F.col("pr.b.n").alias("n_b"),
+    )
     agg = pairs.groupBy("doc_a", "doc_b", "n_a", "n_b").agg(
         F.count("*").alias("ni")
     )
@@ -1790,19 +1732,11 @@ def weighted_jaccard_pairs(
         # doc-sized; feeds BOTH join orientations (dwa, dwb)
         .localCheckpoint(eager=False)
     )
-    pair = F.explode(
-        F.expr(
-            "flatten(transform(ds, (x, i) -> "
-            "transform(slice(ds, i + 2, size(ds) - i - 1), "
-            "y -> struct(x AS doc_a, y AS doc_b))))"
-        )
-    ).alias("pr")
+    pair = F.explode(sorted_pairs("ds", "doc_a", "doc_b")).alias("pr")
     pair_buckets = buckets.filter(F.size("ds") > 1)
     if df_cap == "auto":
-        cap = docs.agg(_auto_cap(F.count("*")).alias("df_cap"))
-        pair_buckets = pair_buckets.crossJoin(F.broadcast(cap)).filter(
-            F.size("ds") <= F.col("df_cap")
-        )
+        cap = grams.agg(_auto_cap(F.count("*")).alias("df_cap"))
+        pair_buckets = _cap_buckets(pair_buckets, "ds", cap)
     elif df_cap is not None:
         pair_buckets = pair_buckets.filter(F.size("ds") <= df_cap)
     inter = (

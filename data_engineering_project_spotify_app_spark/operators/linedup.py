@@ -40,6 +40,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_engineering_project_spotify_app_spark.functions.pairs import (
+    sorted_pairs,
+)
 from data_engineering_project_spotify_app_spark.functions.text import (
     TOKENS_SQL,
     tokens,
@@ -49,6 +52,7 @@ from data_engineering_project_spotify_app_spark.operators.dedup import (
     CAP_FLOOR,
     MINHASH_CTES,
     _auto_cap,
+    _cap_buckets,
 )
 from data_engineering_project_spotify_app_spark.operators.registry import query
 from data_engineering_project_spotify_app_spark.tables import table_parallel
@@ -316,21 +320,16 @@ def diag_islands_df(docs: DataFrame) -> DataFrame:
         g.groupBy("h")
         .agg(F.array_sort(F.collect_list(F.struct("doc_id", "pos"))).alias("occ"))
         .filter(F.size("occ") > 1)
-        .crossJoin(F.broadcast(cap))
-        .filter(F.size("occ") <= F.col("df_cap"))
     )
     pairs = (
-        buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(occ, (x, i) -> "
-                    "transform(slice(occ, i + 2, size(occ) - i - 1), "
-                    "y -> struct(x.doc_id AS da, x.pos AS pa, "
-                    "y.doc_id AS db, y.pos AS pb))))"
-                )
-            ).alias("pr")
+        _cap_buckets(buckets, "occ", cap)
+        .select(F.explode(sorted_pairs("occ", "a", "b")).alias("pr"))
+        .select(
+            F.col("pr.a.doc_id").alias("da"),
+            F.col("pr.a.pos").alias("pa"),
+            F.col("pr.b.doc_id").alias("db"),
+            F.col("pr.b.pos").alias("pb"),
         )
-        .select("pr.da", "pr.pa", "pr.db", "pr.pb")
         .filter(F.col("da") != F.col("db"))
     )
     diag = (F.col("pa") - F.col("pb")).alias("diag")
@@ -605,14 +604,7 @@ def intra_doc_spans(docs: DataFrame) -> DataFrame:
         .filter((F.size("ps") > 1) & (F.size("ps") <= INTRA_GRAM_CAP))
     )
     pairs = buckets.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "flatten(transform(ps, (x, i) -> "
-                "transform(slice(ps, i + 2, size(ps) - i - 1), "
-                "y -> struct(x AS pe, y AS pl))))"
-            )
-        ).alias("pr"),
+        "doc_id", F.explode(sorted_pairs("ps", "pe", "pl")).alias("pr")
     ).select("doc_id", "pr.pe", "pr.pl")
     diag = (F.col("pl") - F.col("pe")).alias("diag")
     wr = Window.partitionBy("doc_id", "diag").orderBy("pl")

@@ -26,6 +26,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from data_engineering_project_spotify_app_spark.functions.pairs import (
+    sorted_pairs,
+)
 from data_engineering_project_spotify_app_spark.operators.registry import query
 from data_engineering_project_spotify_app_spark.tables import table, table_parallel
 
@@ -394,13 +397,7 @@ def q_ann_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (
         buckets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x AS vec_a, y AS vec_b))))"
-                )
-            ).alias("pr")
+            F.explode(sorted_pairs("ids", "vec_a", "vec_b")).alias("pr")
         )
         .select("pr.vec_a", "pr.vec_b")
         .groupBy("vec_a", "vec_b")

@@ -15,6 +15,9 @@ from pyspark.sql.window import Window
 from data_engineering_project_spotify_app_spark.functions.text import (
     NORMALIZE_SQL,
     TOKENS_SQL,
+    adjacent_pairs,
+    bigram_str,
+    bigram_struct,
     normalize,
     tokens,
 )
@@ -293,9 +296,7 @@ def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     toks = d.select("doc_id", tokens(F.col("text")).alias("tok"))
     n = F.size("tok")
-    heads = F.slice(F.col("tok"), 1, F.greatest(n - 1, F.lit(0)))
-    tails = F.slice(F.col("tok"), 2, F.greatest(n - 1, F.lit(0)))
-    bg = F.when(n >= 2, F.zip_with(heads, tails, lambda x, y: F.concat_ws(" ", x, y))).otherwise(
+    bg = F.when(n >= 2, adjacent_pairs("tok", bigram_str)).otherwise(
         F.array().cast("array<string>")
     )
     base = toks.select(
@@ -444,22 +445,17 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     Docs with fewer than 2 tokens have no bigrams and drop out — in
     both engines identically.
 
-    Scale: consecutive pairs come from zip_with over two array slices
-    (constant references — no per-element re-evaluation, see
-    functions/text.py) exploded once; bigram counts and context counts
-    are hash aggregations on (w1, w2) / w1 (map-side combined, Zipf
-    head collapses early); both score joins are token-partitioned and
-    co-located at 100 TB; only the vocab-size SCALAR is broadcast — no
-    broadcast assumption on the (huge) bigram table.
+    Scale: consecutive pairs come from adjacent_pairs (constant
+    references — no per-element re-evaluation) exploded once; bigram
+    counts and context counts are hash aggregations on (w1, w2) / w1
+    (map-side combined, Zipf head collapses early); both score joins
+    are token-partitioned and co-located at 100 TB; only the vocab-size
+    SCALAR is broadcast — no broadcast assumption on the (huge) bigram
+    table.
     """
     d = table_parallel(spark, sf_dir, "documents")
     toks = d.select("doc_id", tokens(F.col("text")).alias("t"))
-    n = F.size("t")
-    pairs = F.zip_with(
-        F.slice("t", 1, F.greatest(n - 1, F.lit(0))),
-        F.slice("t", 2, F.greatest(n - 1, F.lit(0))),
-        lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
-    )
+    pairs = adjacent_pairs("t", bigram_struct)
     # bg feeds the bigram counts AND the score join; uc feeds the
     # context join AND the vocab-size scalar (an exact row count of the
     # unigram table). Lazy checkpoints cut the corpus tokenize from
@@ -570,12 +566,7 @@ def q_lm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table_parallel(spark, sf_dir, "documents")
     toks = d.select("doc_id", "source", tokens(F.col("text")).alias("t"))
-    n = F.size("t")
-    pairs = F.zip_with(
-        F.slice("t", 1, F.greatest(n - 1, F.lit(0))),
-        F.slice("t", 2, F.greatest(n - 1, F.lit(0))),
-        lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
-    )
+    pairs = adjacent_pairs("t", bigram_struct)
     is_eval = F.col("source").isin(*_EVAL_SOURCES)
     ev_bg = (
         toks.filter(is_eval)
@@ -1195,12 +1186,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table_parallel(spark, sf_dir, "documents")
     toks = d.select("doc_id", "source", tokens(F.col("text")).alias("t"))
-    n = F.size("t")
-    pairs = F.zip_with(
-        F.slice("t", 1, F.greatest(n - 1, F.lit(0))),
-        F.slice("t", 2, F.greatest(n - 1, F.lit(0))),
-        lambda x, y: F.concat_ws(" ", x, y),
-    )
+    pairs = adjacent_pairs("t", bigram_str)
     feats = (
         toks.select(
             "doc_id",
@@ -1385,12 +1371,7 @@ def q_lm_backoff_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table_parallel(spark, sf_dir, "documents")
     toks = d.select("doc_id", tokens(F.col("text")).alias("t"))
-    n = F.size("t")
-    pairs = F.zip_with(
-        F.slice("t", 1, F.greatest(n - 1, F.lit(0))),
-        F.slice("t", 2, F.greatest(n - 1, F.lit(0))),
-        lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
-    )
+    pairs = adjacent_pairs("t", bigram_struct)
     # bg feeds the count build AND the score join; uc feeds BOTH unigram
     # join sides (w1 backoff denominator, w2 backoff numerator). Lazy
     # checkpoints stop each consumer re-running the tokenize→explode→
@@ -1586,12 +1567,7 @@ def q_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table_parallel(spark, sf_dir, "documents")
     toks = d.select("doc_id", tokens(F.col("text")).alias("t"))
-    n = F.size("t")
-    pairs = F.zip_with(
-        F.slice("t", 1, F.greatest(n - 1, F.lit(0))),
-        F.slice("t", 2, F.greatest(n - 1, F.lit(0))),
-        lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
-    )
+    pairs = adjacent_pairs("t", bigram_struct)
     # bg feeds the count build AND the score join; bc feeds FOUR
     # consumers (ctx, cont, tot, the score join). Lazy checkpoints stop
     # each consumer re-running the tokenize→explode→aggregate lineage
@@ -1691,12 +1667,7 @@ def q_trigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             xy.alias("ctx"), F.concat_ws(" ", xy, z).alias("g")
         ),
     )
-    m2 = F.greatest(n - 1, F.lit(0))
-    bg = F.zip_with(
-        F.slice("t", 1, m2),
-        F.slice("t", 2, m2),
-        lambda x, y: F.concat_ws(" ", x, y),
-    )
+    bg = adjacent_pairs("t", bigram_str)
     # toks (the tokenized arrays) feeds THREE consumers (trigram
     # explode, bigram-context counts, vocab size) and tg feeds two (the
     # count build and the score join) — lazy checkpoints make the

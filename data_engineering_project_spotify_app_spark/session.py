@@ -4,8 +4,10 @@ The reference hand-rolls its execution policy (30-thread pools, a global
 admission semaphore, retry budgets — app.py:35–45, 102–127). In Spark all
 of that is engine configuration, set once here:
 
-- AQE on (runtime re-plan = the reference's "read total, then size the
-  fan-out" trick at app.py:155–158, generalized to every shuffle);
+- AQE, with partition coalescing and skew-join splitting, is on by
+  Spark default and not restated here (runtime re-plan = the
+  reference's "read total, then size the fan-out" trick at
+  app.py:155–158, generalized to every shuffle);
 - shuffle partitions sized to cores for local runs — on a real cluster
   AQE coalesces, so over-provisioning is safe;
 - UTC session timezone (oracle comparisons and any cross-engine exchange);
@@ -76,9 +78,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -102,10 +101,10 @@ def get_spark(
         #   key in extra_conf (AQE skew-join stays on either way).
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # fixture events.parquet stores TIMESTAMP(NANOS); read as long and
-        # convert in tables.py (Spark has no ns timestamp type)
+        # an events.parquet may store TIMESTAMP(NANOS), which a vanilla
+        # session refuses; read it as long and convert in tables.py
+        # (Spark has no ns timestamp type)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # managed-table warehouse (bucketed landings — sources/bucketed.py)
         # off the repo tree; static conf, so set before the first session.

@@ -14,10 +14,12 @@ Spark mapping:
   anti-pattern at scale (100 TB = billions of tiny objects) and is
   provided separately as ``stage_entity_keyed`` for small dimension
   snapshots only.
-- ``load_entity``      → schema'd NDJSON read → ``mode("overwrite")``
-  parquet table. Spark's file-commit protocol makes the overwrite
-  job-atomic — an intentional upgrade over the reference's non-atomic
-  partial-upload failure mode (app.py:203–211, SURVEY.md §4).
+- ``load_entity_quarantine`` → schema'd PERMISSIVE NDJSON read →
+  ``mode("overwrite")`` parquet table, with truncated or un-castable
+  lines split off to a quarantine sink instead of landing as null rows.
+  Spark's file-commit protocol makes the overwrite job-atomic — an
+  intentional upgrade over the reference's non-atomic partial-upload
+  failure mode (app.py:203–211, SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -77,29 +79,6 @@ def stage_entity_keyed(df: DataFrame, staging_dir: str, entity: str) -> str:
     return out
 
 
-def load_entity(
-    spark: SparkSession,
-    staging_dir: str,
-    entity: str,
-    warehouse_dir: str,
-) -> DataFrame:
-    """S7: schema'd NDJSON read → overwrite-replace parquet table.
-
-    The declared-schema read is the engine's equivalent of BigQuery's
-    load-time schema check (a row that can't cast fails the job, not
-    silently corrupts). REPEATED fields are coalesced to empty arrays
-    (BQ semantics, SURVEY.md §1.3). ``--replace`` maps to
-    ``mode("overwrite")``. The table is read back with the schema just
-    written, which skips the footer-reading job of schema inference.
-    """
-    schema = ENTITY_SCHEMAS[entity]
-    df = spark.read.schema(schema).json(f"{staging_dir}/{entity}")
-    df = coalesce_repeated(df, schema)
-    target = f"{warehouse_dir}/{entity}"
-    df.write.mode("overwrite").parquet(target)
-    return spark.read.schema(df.schema).parquet(target)
-
-
 def load_entity_quarantine(
     spark: SparkSession,
     staging_dir: str,
@@ -111,17 +90,20 @@ def load_entity_quarantine(
     The reference's load either hard-fails the whole `bq load` or lets
     BigQuery drop bad rows (README.md:185–204 gives no bad-record
     story). The production pattern at 100 TB: PERMISSIVE read with
-    ``columnNameOfCorruptRecord`` — malformed lines land whole in a
+    ``columnNameOfCorruptRecord`` — malformed lines (truncated JSON, or
+    a value that can't cast to the declared type) land whole in a
     quarantine column instead of killing the job — then split the
     frame: clean rows land in the warehouse table, corrupt raw lines
-    land in ``{entity}__quarantine`` for replay/inspection. Returns
+    land in ``{entity}__quarantine`` for replay/inspection. REPEATED
+    fields are coalesced to empty arrays (BQ semantics, SURVEY.md
+    §1.3); ``--replace`` maps to ``mode("overwrite")``. Returns
     (clean, quarantined).
 
     One pass over the staging files; the split is two filters over the
     same cached read (corrupt rows are the rare side, so the second
-    scan is cheap and keeps the path declarative). As in
-    ``load_entity``, the clean table is read back with the schema just
-    written, without an inference job.
+    scan is cheap and keeps the path declarative). The clean table is
+    read back with the schema just written, which skips the
+    footer-reading job of schema inference.
     """
     from pyspark.sql import types as T
 
@@ -161,9 +143,12 @@ def load_entity_quarantine(
 def load_all_entities(
     spark: SparkSession, staging_dir: str, warehouse_dir: str
 ) -> dict[str, DataFrame]:
-    """The reference's three-table load loop (README.md:185–204)."""
+    """The reference's three-table load loop (README.md:185–204): the
+    clean table of each entity's quarantining load."""
     return {
-        entity: load_entity(spark, staging_dir, entity, warehouse_dir)
+        entity: load_entity_quarantine(
+            spark, staging_dir, entity, warehouse_dir
+        )[0]
         for entity in ENTITY_SCHEMAS
     }
 

@@ -44,6 +44,7 @@ from data_engineering_project_spotify_app_spark.operators.dedup import (
 )
 from data_engineering_project_spotify_app_spark.streaming.delta_chain import (
     DeltaChainStore,
+    delta_pairs,
 )
 from data_engineering_project_spotify_app_spark.streaming.sinks import (
     resolve_checkpoint,
@@ -65,92 +66,6 @@ def stream_documents(
     )
 
 
-def delta_candidate_pairs(
-    bands_new: DataFrame,
-    bands_store: DataFrame | None,
-    bucket_cap: int | None = None,
-) -> DataFrame:
-    """(doc_a, doc_b, n_bands_matched) pairs touching the delta: the
-    new-new triangle (bucket-collect inside the batch's bands) plus
-    new × store bucket matches. The delta side is the small one by
-    construction — it is broadcast into the store join, so the store
-    is probed in place and never shuffled.
-
-    ``bucket_cap`` is the streaming form of the batch skew guard
-    (q_minhash_lsh_capped): an uninformative band key accumulates
-    members in the STORE forever, so by epoch N a degenerate bucket
-    pairs every new doc against an unbounded store-side posting list —
-    the one place the delta-only cost model O(|new| × |bucket|) can
-    silently degrade toward O(|new| × |corpus|). The cap drops band
-    keys whose TOTAL occupancy (store + batch) exceeds it, on both the
-    triangle and the cross join, before any pair is generated; the cap
-    frame is tiny (distinct over-full keys only) and broadcast."""
-    capped_new = bands_new
-    capped_store = bands_store
-    if bucket_cap is not None:
-        # Occupancy is counted ONLY over buckets the delta touches — a
-        # bucket without a new member generates no pairs this epoch, so
-        # counting it is wasted work, and counting the WHOLE store per
-        # epoch would be O(store)/epoch (the same quadratic-cumulative
-        # shape the delta-chain store write avoids). The semi-join keys
-        # are the delta's distinct band keys, broadcast; on a store
-        # table bucketed by band_key this probe prunes to the touched
-        # buckets.
-        new_keys = bands_new.select("band", "band_key").distinct()
-        occupancy = bands_new.select("band", "band_key")
-        if bands_store is not None:
-            occupancy = occupancy.unionByName(
-                bands_store.join(
-                    F.broadcast(new_keys), ["band", "band_key"], "leftsemi"
-                ).select("band", "band_key")
-            )
-        overfull = (
-            occupancy.groupBy("band", "band_key")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") > bucket_cap)
-            .select("band", "band_key")
-        )
-        capped_new = bands_new.join(
-            F.broadcast(overfull), ["band", "band_key"], "left_anti"
-        )
-        if bands_store is not None:
-            capped_store = bands_store.join(
-                F.broadcast(overfull), ["band", "band_key"], "left_anti"
-            )
-    triangle = (
-        capped_new.groupBy("band", "band_key")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x AS doc_a, y AS doc_b))))"
-                )
-            ).alias("pr")
-        )
-        .select("pr.doc_a", "pr.doc_b")
-    )
-    matches = triangle
-    if capped_store is not None:
-        new = capped_new.select(
-            "band", "band_key", F.col("doc_id").alias("new_id")
-        )
-        cross = (
-            capped_store.join(F.broadcast(new), ["band", "band_key"])
-            .filter(F.col("doc_id") != F.col("new_id"))
-            .select(
-                F.least("doc_id", "new_id").alias("doc_a"),
-                F.greatest("doc_id", "new_id").alias("doc_b"),
-            )
-        )
-        matches = matches.unionByName(cross)
-    return matches.groupBy("doc_a", "doc_b").agg(
-        F.count("*").alias("n_bands_matched")
-    )
-
-
 class StreamingLshDedupSink(DeltaChainStore):
     """foreachBatch maintainer of the LSH band store + pairs log.
     Store machinery (delta chain, base, compaction) lives in
@@ -158,7 +73,7 @@ class StreamingLshDedupSink(DeltaChainStore):
     pairs output log.
 
     ``bucket_cap``, when set, applies the streaming skew guard at every
-    epoch (see delta_candidate_pairs). Streaming cap semantics are
+    epoch (see delta_chain.delta_pairs). Streaming cap semantics are
     necessarily PREFIX semantics: occupancy is judged as of the current
     epoch, so a bucket that crosses the cap at epoch N stops producing
     pairs from N on, but its pre-N pairs were already durably emitted —
@@ -281,8 +196,12 @@ class StreamingLshDedupSink(DeltaChainStore):
                 if store_paths
                 else None
             )
-            delta_candidate_pairs(
-                bands_new, store, bucket_cap=self.bucket_cap
+            delta_pairs(
+                bands_new,
+                store,
+                ["band", "band_key"],
+                "n_bands_matched",
+                self.bucket_cap,
             ).write.mode("overwrite").parquet(pairs_dir)
             self._mark(pairs_dir)
         if not delta_done:

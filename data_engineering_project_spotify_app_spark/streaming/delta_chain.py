@@ -1,5 +1,7 @@
 """Append-only delta-chain store machinery shared by the streaming
-dedup sinks (dedup_stream.py, linedup_stream.py).
+dedup sinks (dedup_stream.py, linedup_stream.py, winnow_stream.py), and
+the delta-only pair generator (``delta_pairs``) the LSH and winnowing
+sinks run each epoch.
 
 Layout inside ``out_dir``:
 
@@ -29,6 +31,81 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from data_engineering_project_spotify_app_spark.functions.pairs import (
+    sorted_pairs,
+)
+
+
+def delta_pairs(
+    new: DataFrame,
+    store: DataFrame | None,
+    keys: list[str],
+    count_col: str,
+    cap: int | None = None,
+) -> DataFrame:
+    """(doc_a, doc_b, ``count_col``) pairs touching the delta, from
+    (doc_id, *keys) rows: the new-new triangle (bucket-collect inside
+    the batch) plus new × store key matches, counted per pair. The delta
+    side is the small one by construction — it is broadcast into the
+    store join, so the store is probed in place and never shuffled.
+
+    ``cap`` is the streaming form of the batch skew guard: an
+    uninformative key accumulates members in the STORE forever, so by
+    epoch N a degenerate bucket pairs every new doc against an unbounded
+    store-side posting list — the one place the delta-only cost model
+    O(|new| × |bucket|) can silently degrade toward O(|new| × |corpus|).
+    The cap drops keys whose TOTAL occupancy (store + batch) exceeds it,
+    on both the triangle and the cross join, before any pair is
+    generated; the cap frame is tiny (distinct over-full keys only) and
+    broadcast."""
+    if cap is not None:
+        # Occupancy is counted ONLY over keys the delta touches — a
+        # bucket without a new member generates no pairs this epoch, so
+        # counting it is wasted work, and counting the WHOLE store per
+        # epoch would be O(store)/epoch (the same quadratic-cumulative
+        # shape the delta-chain store write avoids). The semi-join keys
+        # are the delta's distinct keys, broadcast; on a store table
+        # bucketed by key this probe prunes to the touched buckets.
+        new_keys = new.select(*keys).distinct()
+        occupancy = new.select(*keys)
+        if store is not None:
+            occupancy = occupancy.unionByName(
+                store.join(F.broadcast(new_keys), keys, "leftsemi").select(
+                    *keys
+                )
+            )
+        overfull = (
+            occupancy.groupBy(*keys)
+            .agg(F.count("*").alias("n"))
+            .filter(F.col("n") > cap)
+            .select(*keys)
+        )
+        new = new.join(F.broadcast(overfull), keys, "left_anti")
+        if store is not None:
+            store = store.join(F.broadcast(overfull), keys, "left_anti")
+    matches = (
+        new.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+        .filter(F.size("ids") > 1)
+        .select(F.explode(sorted_pairs("ids", "doc_a", "doc_b")).alias("pr"))
+        .select("pr.doc_a", "pr.doc_b")
+    )
+    if store is not None:
+        probe = new.select(*keys, F.col("doc_id").alias("new_id"))
+        cross = (
+            store.join(F.broadcast(probe), keys)
+            .filter(F.col("doc_id") != F.col("new_id"))
+            .select(
+                F.least("doc_id", "new_id").alias("doc_a"),
+                F.greatest("doc_id", "new_id").alias("doc_b"),
+            )
+        )
+        matches = matches.unionByName(cross)
+    return matches.groupBy("doc_a", "doc_b").agg(
+        F.count("*").alias(count_col)
+    )
 
 
 class DeltaChainStore:

@@ -104,8 +104,9 @@ def stage_watch(
 ) -> DataFrame:
     """Streaming S7: watch a staged entity folder, schema-enforced.
 
-    The exact streaming lift of load_entity — the reference's `bq load`
-    cron becomes a continuously-running ingest.
+    The streaming lift of the S7 schema'd read — the reference's
+    `bq load` cron becomes a continuously-running ingest. Unlike
+    ingest.load_entity_quarantine it has no quarantine split.
     """
     return (
         spark.readStream.schema(ENTITY_SCHEMAS[entity])
@@ -320,16 +321,13 @@ def lm_score_stream(
     on doc_id for the final agg, the same join ladder as the batch twin.
     """
     from data_engineering_project_spotify_app_spark.functions.text import (
+        adjacent_pairs,
+        bigram_struct,
         tokens,
     )
 
     toks = docs.select("doc_id", tokens(F.col("text")).alias("t"))
-    n = F.size("t")
-    pairs = F.zip_with(
-        F.slice("t", 1, F.greatest(n - 1, F.lit(0))),
-        F.slice("t", 2, F.greatest(n - 1, F.lit(0))),
-        lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
-    )
+    pairs = adjacent_pairs("t", bigram_struct)
     bg = toks.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id", "p.w1", "p.w2"
     )

@@ -45,6 +45,7 @@ from data_engineering_project_spotify_app_spark.operators.dedup import (
 )
 from data_engineering_project_spotify_app_spark.streaming.delta_chain import (
     DeltaChainStore,
+    delta_pairs,
 )
 from data_engineering_project_spotify_app_spark.streaming.sinks import (
     resolve_checkpoint,
@@ -70,74 +71,6 @@ class PartialStoreError(ValueError):
 # session gets a new application id and recomputes, so no
 # cross-session staleness).
 _EXPECTED_IDS_CACHE: dict[tuple[str, str, object, str], DataFrame] = {}
-
-
-def delta_shared_pairs(
-    fp_new: DataFrame,
-    fp_store: DataFrame | None,
-    df_cap: int | None = None,
-) -> DataFrame:
-    """(doc_a, doc_b, n_shared) pairs touching the delta: the new-new
-    triangle (fingerprint-collect inside the batch) plus new × store
-    fingerprint matches. The delta side is the small one by
-    construction — broadcast into the store join, so the store is
-    probed in place and never shuffled.
-
-    ``df_cap`` occupancy is counted ONLY over fingerprints the delta
-    touches (a fingerprint without a new member generates no pairs this
-    epoch; counting the whole store per epoch would be O(store)/epoch).
-    """
-    capped_new, capped_store = fp_new, fp_store
-    if df_cap is not None:
-        new_keys = fp_new.select("fp").distinct()
-        occupancy = fp_new.select("fp")
-        if fp_store is not None:
-            occupancy = occupancy.unionByName(
-                fp_store.join(
-                    F.broadcast(new_keys), "fp", "leftsemi"
-                ).select("fp")
-            )
-        overfull = (
-            occupancy.groupBy("fp")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") > df_cap)
-            .select("fp")
-        )
-        capped_new = fp_new.join(F.broadcast(overfull), "fp", "left_anti")
-        if fp_store is not None:
-            capped_store = fp_store.join(
-                F.broadcast(overfull), "fp", "left_anti"
-            )
-    triangle = (
-        capped_new.groupBy("fp")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x AS doc_a, y AS doc_b))))"
-                )
-            ).alias("pr")
-        )
-        .select("pr.doc_a", "pr.doc_b")
-    )
-    matches = triangle
-    if capped_store is not None:
-        new = capped_new.select("fp", F.col("doc_id").alias("new_id"))
-        cross = (
-            capped_store.join(F.broadcast(new), "fp")
-            .filter(F.col("doc_id") != F.col("new_id"))
-            .select(
-                F.least("doc_id", "new_id").alias("doc_a"),
-                F.greatest("doc_id", "new_id").alias("doc_b"),
-            )
-        )
-        matches = matches.unionByName(cross)
-    return matches.groupBy("doc_a", "doc_b").agg(
-        F.count("*").alias("n_shared")
-    )
 
 
 class StreamingWinnowSink(DeltaChainStore):
@@ -387,8 +320,8 @@ class StreamingWinnowSink(DeltaChainStore):
                 if store_paths
                 else None
             )
-            delta_shared_pairs(
-                fp_new, store, df_cap=self.df_cap
+            delta_pairs(
+                fp_new, store, ["fp"], "n_shared", self.df_cap
             ).write.mode("overwrite").parquet(pairs_dir)
             self._mark(pairs_dir)
         if not delta_done:

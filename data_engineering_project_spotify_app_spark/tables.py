@@ -38,8 +38,8 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     The driver harness calls queries() with ITS OWN SparkSession, which
     may lack the session.py builder confs; both of these are runtime-
     settable SQL confs, so set them defensively on every table access:
-    - nanosAsLong: events.parquet stores TIMESTAMP(NANOS) — the read
-      throws PARQUET_TYPE_ILLEGAL without it;
+    - nanosAsLong: an events.parquet may store TIMESTAMP(NANOS) — its
+      read throws PARQUET_TYPE_ILLEGAL without it;
     - UTC session timezone: timestamp values must collect identically to
       the (naive-UTC) DuckDB oracle regardless of host timezone.
     """
@@ -53,8 +53,8 @@ def _ensure_session_confs(spark: SparkSession) -> None:
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One fixture table as a DataFrame (lazy parquet scan).
 
-    ``events.ts`` is stored as TIMESTAMP(NANOS), which Spark reads as a
-    nanosecond long (``nanosAsLong`` conf in session.py); it is converted
+    ``events.ts`` may be stored as TIMESTAMP(NANOS), which Spark reads as
+    a nanosecond long (``nanosAsLong`` conf in session.py); it is converted
     to a microsecond timestamp here (truncating, matching DuckDB's
     ``CAST(ts AS TIMESTAMP)`` on the same file — the oracles do exactly
     that, so both engines compute on identical µs values).

@@ -179,7 +179,7 @@ def build_catalog(n_artists: int = 6, albums_per_artist: int = 4):
 
 def write_staging(staging_dir: str, artists, albums_, tracks_) -> None:
     """Serialize as NDJSON per entity folder — the reference's staging
-    layout (app.py:204–208) as consumed by ingest.load_entity."""
+    layout (app.py:204–208) as consumed by ingest.load_entity_quarantine."""
     for entity, rows in (
         ("artists", artists),
         ("albums", albums_),

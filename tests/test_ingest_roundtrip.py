@@ -19,9 +19,9 @@ from data_engineering_project_spotify_app_spark.schemas import (
 )
 from data_engineering_project_spotify_app_spark.sources.ingest import (
     load_all_entities,
+    load_entity_quarantine,
     stage_entity,
     stage_entity_keyed,
-    load_entity,
 )
 from tests.spotify_fixtures import artist, build_catalog, write_staging
 
@@ -50,7 +50,9 @@ def test_roundtrip_all_entities(spark, tmp_path):
     # re-stage the loaded frame and re-load: fixpoint (schema'd round-trip)
     staging2 = str(tmp_path / "staging2")
     stage_entity(loaded["albums"], staging2, "albums")
-    reloaded = load_entity(spark, staging2, "albums", str(tmp_path / "wh2"))
+    reloaded, _ = load_entity_quarantine(
+        spark, staging2, "albums", str(tmp_path / "wh2")
+    )
     assert reloaded.count() == len(albums_)
     a = sorted(loaded["albums"].select("id", "total_tracks").collect())
     b = sorted(reloaded.select("id", "total_tracks").collect())
@@ -65,7 +67,7 @@ def test_missing_repeated_is_empty_array_not_null(spark, tmp_path):
     d.mkdir(parents=True)
     (d / "p.json").write_text(json.dumps(row) + "\n")
 
-    loaded = load_entity(
+    loaded, _ = load_entity_quarantine(
         spark, str(tmp_path / "staging"), "artists", str(tmp_path / "wh")
     )
     got = loaded.select("genres").first()[0]
@@ -80,7 +82,7 @@ def test_unknown_fields_dropped_by_declared_schema(spark, tmp_path):
     d.mkdir(parents=True)
     (d / "p.json").write_text(json.dumps(row) + "\n")
 
-    loaded = load_entity(
+    loaded, _ = load_entity_quarantine(
         spark, str(tmp_path / "staging"), "artists", str(tmp_path / "wh")
     )
     assert loaded.columns == [f.name for f in ARTISTS_SCHEMA.fields]
@@ -142,18 +144,23 @@ def test_release_date_precision_matrix(spark):
 
 
 def test_malformed_row_fails_load_like_bq(spark, tmp_path):
-    """BQ load-time schema check equivalent: a row whose type can't cast
-    surfaces as nulls under FAILFAST-less read; assert the declared-schema
-    read flags it rather than silently widening."""
+    """BQ load-time schema check equivalent: a row whose value can't
+    cast to the declared type does not land (not even as a null field);
+    its raw line goes to the quarantine sink, and the table keeps the
+    declared type."""
     d = tmp_path / "staging" / "albums"
     d.mkdir(parents=True)
     bad = {"id": "al999", "total_tracks": "not-a-number"}
-    (d / "p.json").write_text(json.dumps(bad) + "\n")
-    loaded = load_entity(
+    good = {"id": "al001", "total_tracks": 3}
+    lines = [json.dumps(good), json.dumps(bad)]
+    (d / "p.json").write_text("\n".join(lines) + "\n")
+    loaded, quarantined = load_entity_quarantine(
         spark, str(tmp_path / "staging"), "albums", str(tmp_path / "wh")
     )
-    row = loaded.filter(F.col("id") == "al999").first()
-    assert row["total_tracks"] is None  # un-castable → null, schema intact
+    assert [tuple(r) for r in loaded.select("id", "total_tracks").collect()] == [
+        ("al001", 3)
+    ]
+    assert [r["raw"] for r in quarantined.collect()] == [lines[1]]
     assert dict(loaded.dtypes)["total_tracks"] == "bigint"
 
 
@@ -183,10 +190,6 @@ def test_corrupt_records_quarantined_not_dropped(spark, tmp_path):
     """load_entity_quarantine: malformed NDJSON lines land whole in the
     quarantine sink; clean rows load normally; nothing silently
     disappears (clean + quarantined == staged lines)."""
-    from data_engineering_project_spotify_app_spark.sources.ingest import (
-        load_entity_quarantine,
-    )
-
     stage = tmp_path / "stage" / "artists"
     os.makedirs(stage)
     good = [artist(i) for i in range(5)]
@@ -241,21 +244,37 @@ def test_compact_entity_preserves_rows_and_shrinks_files(spark, tmp_path):
 
 
 def test_loaded_tables_read_back_with_the_inferred_schema(spark, tmp_path):
-    """Both loads return the table read with the schema they just wrote
+    """The load returns the table read with the schema it just wrote
     (no schema-inference job); it must equal the schema Spark infers
     from the parquet footers, so no consumer sees a different frame."""
-    from data_engineering_project_spotify_app_spark.sources.ingest import (
-        load_entity_quarantine,
-    )
-
     artists, albums_, tracks_ = build_catalog(n_artists=2, albums_per_artist=1)
     staging = str(tmp_path / "staging")
     write_staging(staging, artists, albums_, tracks_)
     warehouse = str(tmp_path / "wh")
     rows = {"artists": artists, "albums": albums_, "tracks": tracks_}
-    for load in (load_entity, lambda *a: load_entity_quarantine(*a)[0]):
-        for entity, staged in rows.items():
-            loaded = load(spark, staging, entity, warehouse)
-            inferred = spark.read.parquet(f"{warehouse}/{entity}").schema
-            assert loaded.schema == inferred, entity
-            assert loaded.count() == len(staged)
+    loaded = load_all_entities(spark, staging, warehouse)
+    for entity, staged in rows.items():
+        inferred = spark.read.parquet(f"{warehouse}/{entity}").schema
+        assert loaded[entity].schema == inferred, entity
+        assert loaded[entity].count() == len(staged)
+
+
+def test_load_all_entities_lands_no_bad_line(spark, tmp_path):
+    """The CLI load path (load_all_entities) quarantines a truncated
+    line and an un-castable one: neither lands as a null-keyed or
+    null-field row in the table."""
+    artists, albums_, tracks_ = build_catalog(n_artists=2, albums_per_artist=1)
+    staging = str(tmp_path / "staging")
+    write_staging(staging, artists, albums_, tracks_)
+    bad = ['{"id": "ar900", "name": "trunc', json.dumps(
+        artist(901, popularity="not-a-number")
+    )]
+    with open(os.path.join(staging, "artists", "part-001.json"), "w") as fh:
+        fh.write("\n".join(bad) + "\n")
+    loaded = load_all_entities(spark, staging, str(tmp_path / "wh"))
+    got = sorted(
+        tuple(r) for r in loaded["artists"].select("id", "popularity").collect()
+    )
+    assert got == sorted((a["id"], a["popularity"]) for a in artists)
+    assert loaded["albums"].count() == len(albums_)
+    assert loaded["tracks"].count() == len(tracks_)
