@@ -379,9 +379,6 @@ _MINHASH_ORACLE = f"""
     """
 
 
-SIG_BUCKETS = 32
-
-
 def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K=16 min-hash signature per doc, as a shared bucketed landing.
 
@@ -403,7 +400,6 @@ def _minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "minhash_signatures",
         "doc_id",
-        SIG_BUCKETS,
         lambda: minhash_signatures_df(
             table_parallel(spark, sf_dir, "documents")
         ),
@@ -432,7 +428,7 @@ def _bigram_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return landed_frame(
-        spark, sf_dir, "word_bigrams", "doc_id", SIG_BUCKETS, build
+        spark, sf_dir, "word_bigrams", "doc_id", build
     )
 
 
@@ -758,7 +754,6 @@ def _simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "simhash_signatures",
         "doc_id",
-        SIG_BUCKETS,
         lambda: simhash_signatures_df(
             table_parallel(spark, sf_dir, "documents")
         ),
@@ -1870,7 +1865,6 @@ def _winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "winnow_fingerprints",
         "fp",
-        SIG_BUCKETS,
         lambda: winnow_fingerprints_df(
             table_parallel(spark, sf_dir, "documents")
         ),
@@ -2039,7 +2033,6 @@ def _winnow_word_fingerprints(
         sf_dir,
         "winnow_word_fingerprints",
         "fp",
-        SIG_BUCKETS,
         lambda: winnow_word_fingerprints_df(
             table_parallel(spark, sf_dir, "documents")
         ),

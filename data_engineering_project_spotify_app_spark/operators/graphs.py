@@ -77,7 +77,7 @@ def landed_part_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return landed_frame(
-        spark, sf_dir, "part_baskets", "l_orderkey", EDGE_BUCKETS, build
+        spark, sf_dir, "part_baskets", "l_orderkey", build
     )
 
 
@@ -118,12 +118,6 @@ def basket_edges(baskets: DataFrame) -> DataFrame:
     return pairs.distinct()
 
 
-# Edge-landing bucket count: fixed at write time, sized for the bench/
-# test graphs (1.2 M edges at sf0.1). At 100 TB this is the "buckets ≈
-# data / 512 MB" sizing note in sources/bucketed.py.
-EDGE_BUCKETS = 16
-
-
 def landed_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The co-purchase edge frame as a shared, bucketed, at-rest table.
 
@@ -145,7 +139,6 @@ def landed_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "copurchase_edges",
         "src",
-        EDGE_BUCKETS,
         lambda: copurchase_edges(spark, sf_dir),
         sort_cols=["src", "dst"],
     )
@@ -478,7 +471,6 @@ def landed_oriented_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         "oriented_adjacency",
         "s",
-        EDGE_BUCKETS,
         lambda: _oriented_adjacency(
             landed_copurchase_edges(spark, sf_dir).filter(
                 F.col("src") < F.col("dst")

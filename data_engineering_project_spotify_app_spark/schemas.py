@@ -214,13 +214,16 @@ def repeated_fields(schema: T.StructType) -> list[str]:
 
 def coalesce_repeated(df: DataFrame, schema: T.StructType) -> DataFrame:
     """BQ REPEATED semantics: a missing repeated field is an EMPTY array,
-    never NULL (SURVEY.md §1.3 item 2). Apply at ingest."""
-    for name in repeated_fields(schema):
-        field_type = schema[name].dataType
-        df = df.withColumn(
-            name, F.coalesce(F.col(name), F.array().cast(field_type))
-        )
-    return df
+    never NULL (SURVEY.md §1.3 item 2). Apply at ingest. One projection
+    for all fields: a withColumn per field analyzes one plan per field."""
+    return df.withColumns(
+        {
+            name: F.coalesce(
+                F.col(name), F.array().cast(schema[name].dataType)
+            )
+            for name in repeated_fields(schema)
+        }
+    )
 
 
 def release_date_as_date(

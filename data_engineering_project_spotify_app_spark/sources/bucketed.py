@@ -16,12 +16,18 @@ per-key addressing the storage contract, a bucketed table makes
 per-key CO-LOCATION the contract and leaves addressing to the format.
 
 Scale notes:
-- bucket count is fixed at write time: size it to the TARGET corpus
-  (buckets ≈ data_size / desired_task_size), not the current one —
-  at 100 TB with 512 MB tasks that's ~200k buckets; local tests use
-  small counts. Too few buckets = giant tasks; AQE cannot split a
-  skewed BUCKET join (skew-join splitting only applies to shuffle
-  joins), so a hot key still needs salting upstream of the landing.
+- bucket count is fixed at write time, so it is sized from the corpus
+  the landing derives from: corpus_buckets() gives
+  ``min(maxBuckets, max(defaultParallelism, ceil(corpus_bytes /
+  maxPartitionBytes)))`` — the rule Spark's file scan uses to split
+  its input (``FilePartition.maxSplitBytes``: splits of at most
+  ``spark.sql.files.maxPartitionBytes``, at least one per core). A
+  250 KB corpus on 4 cores lands 4 buckets, on a 32-core driver 32;
+  100 TB at 128 MB splits would be ~750k, so it is capped at
+  ``spark.sql.sources.bucketing.maxBuckets`` (100k by default). Too
+  few buckets = giant tasks; AQE cannot split a skewed BUCKET join
+  (skew-join splitting only applies to shuffle joins), so a hot key
+  still needs salting upstream of the landing.
 - ``sortBy`` the bucket key so single-file buckets need no re-sort
   before a sort-merge join; Spark still inserts a Sort when a bucket
   has several files — land with one write (no appends) to keep the
@@ -248,7 +254,9 @@ def land_bucketed(
     sort_cols: list[str] | None = None,
 ) -> None:
     """Land ``df`` as a managed parquet table bucketed (and sorted) on
-    ``bucket_col`` — the pay-the-shuffle-once write.
+    ``bucket_col`` — the pay-the-shuffle-once write. Landings derived
+    from a corpus pass ``corpus_buckets(spark, sf_dir)`` as
+    ``n_buckets``, so every landing of one corpus co-buckets.
 
     One writer job per landing (mode=overwrite): appends would add a
     second file per bucket and reintroduce the pre-join Sort. The
@@ -354,21 +362,56 @@ def _landing_lock(key: tuple[str, str, str]) -> threading.Lock:
 _FP_PROP = "graft.source_fingerprint"
 
 
-def corpus_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of a corpus directory: parquet file count +
-    total bytes + max mtime (ns). Cheap (one os.stat per file, no data
-    read) yet catches every in-place regeneration short of a same-size
-    same-mtime rewrite — the staleness granularity a metastore's own
-    transaction log would give a real table format."""
+def corpus_stat(path: str) -> tuple[int, int, int]:
+    """(parquet file count, total bytes, max mtime ns) of a parquet
+    file or of every parquet file under a directory — one os.stat per
+    file, no data read."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return 1, st.st_size, st.st_mtime_ns
     n, total, mx = 0, 0, 0
-    for root, _dirs, files in os.walk(sf_dir):
+    for root, _dirs, files in os.walk(path):
         for f in files:
             if f.endswith(".parquet"):
                 st = os.stat(os.path.join(root, f))
                 n += 1
                 total += st.st_size
                 mx = max(mx, st.st_mtime_ns)
-    return f"{n}:{total}:{mx}"
+    return n, total, mx
+
+
+def _fingerprint(stat: tuple[int, int, int]) -> str:
+    return "{}:{}:{}".format(*stat)
+
+
+def corpus_fingerprint(sf_dir: str) -> str:
+    """Content fingerprint of a corpus directory: parquet file count +
+    total bytes + max mtime (ns). Cheap (one os.stat per file, no data
+    read) yet catches every in-place regeneration short of a same-size
+    same-mtime rewrite — the staleness granularity a metastore's own
+    transaction log would give a real table format."""
+    return _fingerprint(corpus_stat(sf_dir))
+
+
+def _buckets_for(spark: SparkSession, corpus_bytes: int) -> int:
+    conf = spark._jsparkSession.sessionState().conf()
+    tasks = -(-corpus_bytes // conf.filesMaxPartitionBytes())
+    return min(
+        conf.bucketingMaxBuckets(),
+        max(spark.sparkContext.defaultParallelism, tasks),
+    )
+
+
+def corpus_buckets(spark: SparkSession, sf_dir: str) -> int:
+    """Bucket count for a landing derived from the corpus at ``sf_dir``:
+    ``min(spark.sql.sources.bucketing.maxBuckets, max(defaultParallelism,
+    ceil(corpus_bytes / spark.sql.files.maxPartitionBytes)))`` — one
+    bucket per input split Spark's file scan would cut from the corpus
+    (``FilePartition.maxSplitBytes``), and at least one per core. It depends only
+    on the corpus bytes and the session, so every landing of one corpus
+    gets the same count and co-bucketed joins between them keep
+    skipping their Exchange."""
+    return _buckets_for(spark, corpus_stat(sf_dir)[1])
 
 
 def _table_fingerprint(spark: SparkSession, name: str) -> str | None:
@@ -396,7 +439,6 @@ def landed_frame(
     sf_dir: str,
     prefix: str,
     bucket_col: str,
-    n_buckets: int,
     build: Callable[[], DataFrame],
     sort_cols: list[str] | None = None,
 ) -> DataFrame:
@@ -404,8 +446,11 @@ def landed_frame(
     a corpus-digested table name on first use, then serve the table —
     re-landing whenever the SOURCE fingerprint no longer matches the one
     the table was stamped with (corpus regenerated in place), or the
-    memoized table is gone from this session's catalog (drop_landed)."""
-    fp = corpus_fingerprint(sf_dir)
+    memoized table is gone from this session's catalog (drop_landed).
+    The bucket count is corpus_buckets()'s, taken from the same stat
+    walk as the fingerprint."""
+    stat = corpus_stat(sf_dir)
+    fp = _fingerprint(stat)
     key = (prefix, sf_dir, _warehouse(spark))
     memo = _LANDED.get(key)
     # Memo fast path: serve the memoized table (which may be a seeded
@@ -450,7 +495,13 @@ def landed_frame(
             if adopted is not None:
                 _LANDED[key] = (adopted, fp)
                 return spark.table(adopted)
-            land_bucketed(build(), name, bucket_col, n_buckets, sort_cols)
+            land_bucketed(
+                build(),
+                name,
+                bucket_col,
+                _buckets_for(spark, stat[1]),
+                sort_cols,
+            )
             _stamp_fingerprint(spark, name, fp)
         _LANDED[key] = (name, fp)
         return spark.table(name)

@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_project_spotify_app_spark.sources.bucketed import (
+    corpus_buckets,
     drop_landed,
     invalidate_landings,
     land_bucketed,
@@ -196,7 +197,8 @@ class StreamingBasketLandingSink(DeltaChainStore):
         the basket AND edge landings (plus the derived adjacency, via
         publish's refresh) track the stream at compaction cadence with
         no operator intervention. Bucket counts use publish()'s
-        defaults (the batch landings' EDGE_BUCKETS)."""
+        defaults: corpus_buckets(spark, sf_dir), the count the batch
+        landings of the same corpus get."""
         self.spark = spark
         self.out_dir = out_dir
         self.dedupe_guard = dedupe_guard
@@ -348,16 +350,13 @@ class StreamingBasketLandingSink(DeltaChainStore):
         consumers re-derive it from the maintained edges — the O(|E|)
         publish-cadence job discussed in the module docstring. Returns
         (baskets_table, edges_table)."""
-        from data_engineering_project_spotify_app_spark.operators.graphs import (
-            EDGE_BUCKETS,
-        )
-
         baskets = self.current_baskets()
         edges = self.current_edges()
         if baskets is None or edges is None:
             raise ValueError("nothing ingested yet — nothing to publish")
-        bb = basket_buckets or EDGE_BUCKETS
-        eb = edge_buckets or EDGE_BUCKETS
+        n_buckets = corpus_buckets(self.spark, sf_dir)
+        bb = basket_buckets or n_buckets
+        eb = edge_buckets or n_buckets
         bname = landing_table_name("part_baskets", sf_dir) + "_streamed"
         land_bucketed(baskets, bname, "l_orderkey", bb)
         seed_landing(self.spark, sf_dir, "part_baskets", bname)

@@ -10,7 +10,8 @@ reuses the *same* logic as its batch twin:
 - ``tumbling_counts``      — q_tumbling_window's transformation + watermark
 - ``sessionized``          — q_sessionize via session_window
 - ``dedup_stream``         — A1's streaming twin (dropDuplicates + watermark)
-- ``stage_watch``          — streaming load of a staged entity folder
+- ``stage_watch``          — streaming quarantining load of a staged
+                             entity folder
 
 Scale notes: watermarks bound state (late data beyond the horizon is
 dropped — the reference had no late-data story at all); windowed aggs
@@ -24,7 +25,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_engineering_project_spotify_app_spark.schemas import ENTITY_SCHEMAS
+from data_engineering_project_spotify_app_spark.schemas import (
+    ENTITY_SCHEMAS,
+    coalesce_repeated,
+)
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -101,17 +105,41 @@ def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
 
 def stage_watch(
     spark: SparkSession, staging_dir: str, entity: str
-) -> DataFrame:
-    """Streaming S7: watch a staged entity folder, schema-enforced.
+) -> tuple[DataFrame, DataFrame]:
+    """Streaming S7: watch a staged entity folder, schema-enforced, with
+    bad-record quarantine. Returns (clean, quarantined) streaming frames.
 
-    The streaming lift of the S7 schema'd read — the reference's
-    `bq load` cron becomes a continuously-running ingest. Unlike
-    ingest.load_entity_quarantine it has no quarantine split.
+    The streaming lift of ingest.load_entity_quarantine, split the same
+    way: a line that is malformed or holds a value that cannot cast to
+    the declared type goes whole to the quarantine frame (column
+    ``raw``); the rest are clean rows with REPEATED fields coalesced to
+    empty arrays. Each line is parsed with ``from_json`` in PERMISSIVE
+    mode rather than read by the JSON source, whose corrupt-record
+    column a query may not reference on its own
+    (QUERY_ONLY_CORRUPT_RECORD_COLUMN) and a stream cannot cache.
     """
-    return (
-        spark.readStream.schema(ENTITY_SCHEMAS[entity])
-        .json(f"{staging_dir}/{entity}")
+    schema = ENTITY_SCHEMAS[entity]
+    with_cr = T.StructType(
+        schema.fields + [T.StructField("_corrupt_record", T.StringType())]
     )
+    lines = spark.readStream.text(f"{staging_dir}/{entity}").filter(
+        F.trim("value") != ""
+    )
+    opts = {
+        "mode": "PERMISSIVE",
+        "columnNameOfCorruptRecord": "_corrupt_record",
+    }
+    parsed = lines.select(
+        "value", F.from_json("value", with_cr, opts).alias("r")
+    )
+    corrupt = F.col("r._corrupt_record").isNotNull()
+    clean = coalesce_repeated(
+        parsed.filter(~corrupt).select(
+            *(F.col(f"r.{f.name}").alias(f.name) for f in schema.fields)
+        ),
+        schema,
+    )
+    return clean, parsed.filter(corrupt).select(F.col("value").alias("raw"))
 
 
 def run_to_memory_sink(

@@ -214,10 +214,8 @@ class StreamingWinnowSink(DeltaChainStore):
         corpus, cached per (session, corpus, fingerprints_fn) across
         publish attempts (ADVICE r12: auto-publish used to re-pay the
         full-corpus pass on EVERY compaction)."""
-        from data_engineering_project_spotify_app_spark.operators.dedup import (
-            SIG_BUCKETS,
-        )
         from data_engineering_project_spotify_app_spark.sources.bucketed import (
+            corpus_buckets,
             land_bucketed,
             landing_table_name,
             seed_landing,
@@ -264,7 +262,9 @@ class StreamingWinnowSink(DeltaChainStore):
         name = (
             landing_table_name(self.landing_prefix, sf_dir) + "_streamed"
         )
-        land_bucketed(fps, name, "fp", n_buckets or SIG_BUCKETS)
+        land_bucketed(
+            fps, name, "fp", n_buckets or corpus_buckets(self.spark, sf_dir)
+        )
         seed_landing(self.spark, sf_dir, self.landing_prefix, name)
         return name
 

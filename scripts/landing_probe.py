@@ -25,13 +25,13 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F  # noqa: E402
 
 from data_engineering_project_spotify_app_spark.operators.dedup import (  # noqa: E402
-    SIG_BUCKETS,
     minhash_signatures_df,
 )
 from data_engineering_project_spotify_app_spark.session import (  # noqa: E402
     get_spark,
 )
 from data_engineering_project_spotify_app_spark.sources.bucketed import (  # noqa: E402
+    corpus_buckets,
     drop_landed,
     land_bucketed,
 )
@@ -51,6 +51,7 @@ def main() -> None:
     n_epochs = max(5, int(sys.argv[1]) if len(sys.argv) > 1 else 8)
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     spark = get_spark(app_name="landing_probe")
+    n_buckets = corpus_buckets(spark, sf_dir)
     docs = table_parallel(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
@@ -70,7 +71,7 @@ def main() -> None:
         rows = sink.current_landing().count()
         t0 = time.perf_counter()
         land_bucketed(
-            sink.current_landing(), "probe_pub", "doc_id", SIG_BUCKETS
+            sink.current_landing(), "probe_pub", "doc_id", n_buckets
         )
         publish_s = time.perf_counter() - t0
         drop_landed(spark, "probe_pub")
@@ -82,7 +83,7 @@ def main() -> None:
             docs.withColumn("doc_id", F.col("doc_id") + F.lit(off * e))
         )
     t0 = time.perf_counter()
-    land_bucketed(_transform(big), "probe_batch", "doc_id", SIG_BUCKETS)
+    land_bucketed(_transform(big), "probe_batch", "doc_id", n_buckets)
     batch_s = time.perf_counter() - t0
     drop_landed(spark, "probe_batch")
     print(f"epochs: {times}")

@@ -70,7 +70,7 @@ def test_landing_rebuilds_on_corpus_mutation(spark, tmp_path):
 
     def landing():
         return bucketed.landed_frame(
-            spark, corpus, "fp_probe", "k", 2, build
+            spark, corpus, "fp_probe", "k", build
         )
 
     _write_corpus(spark, corpus, [(1, "a"), (2, "b")])
@@ -103,7 +103,6 @@ def test_landing_memo_validates_catalog_after_drop(spark, tmp_path):
             corpus,
             "drop_probe",
             "k",
-            2,
             lambda: spark.read.parquet(f"{corpus}/data.parquet"),
         )
 
@@ -287,14 +286,14 @@ build = lambda: spark.read.parquet(corpus + "/data.parquet")
 if mode == "publish":
     # maintainer flow: batch landing exists, then a maintained table is
     # published and seeded over it (landing_stream.publish's shape)
-    bucketed.landed_frame(spark, corpus, "seed_probe", "k", 2, build)
+    bucketed.landed_frame(spark, corpus, "seed_probe", "k", build)
     name = bucketed.landing_table_name("seed_probe", corpus) + "_streamed"
     bucketed.land_bucketed(build(), name, "k", 2)
     bucketed.seed_landing(spark, corpus, "seed_probe", name)
 else:
     # consumer flow in a FRESH process: must adopt the published table,
     # not silently rebuild the batch landing
-    df = bucketed.landed_frame(spark, corpus, "seed_probe", "k", 2, build)
+    df = bucketed.landed_frame(spark, corpus, "seed_probe", "k", build)
     key = ("seed_probe", corpus, bucketed._warehouse(spark))
     rows = sorted(tuple(r) for r in df.collect())
     print("ADOPTED " + bucketed._LANDED[key][0] + " " + repr(rows))
@@ -363,7 +362,7 @@ def test_stale_seed_marker_is_swept_and_rebuilt(spark, tmp_path):
     spark.sql(f"DROP TABLE {name}")  # managed drop removes dir + entry
     key = ("stale_probe", corpus, bucketed._warehouse(spark))
     del bucketed._LANDED[key]
-    got = bucketed.landed_frame(spark, corpus, "stale_probe", "k", 2, build)
+    got = bucketed.landed_frame(spark, corpus, "stale_probe", "k", build)
     assert [tuple(r) for r in got.collect()] == [(9, "z")]
     assert not bucketed._LANDED[key][0].endswith("_streamed")
     assert not os.path.isfile(marker)  # stale marker swept
@@ -598,7 +597,7 @@ def test_concurrent_same_landing_builds_exactly_once(spark, tmp_path):
         barrier.wait()  # maximize the race window: all enter together
         try:
             df = bucketed.landed_frame(
-                spark, corpus, "race_probe", "k", 2, build
+                spark, corpus, "race_probe", "k", build
             )
             results[i] = sorted(tuple(r) for r in df.collect())
         except Exception as e:  # noqa: BLE001
@@ -635,3 +634,90 @@ def test_build_all_landings_concurrent_and_warm(spark, sf_dir):
     warm = bucketed.build_all_landings(spark, sf_dir, max_workers=4)
     assert sorted(warm) == sorted(names)
     assert dedup._minhash_signatures(spark, sf_dir).count() == before
+
+
+def _sizing_conf(spark) -> tuple[int, int, int]:
+    """(defaultParallelism, maxPartitionBytes, maxBuckets) as the
+    session's SQL conf resolves them."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return (
+        spark.sparkContext.defaultParallelism,
+        conf.filesMaxPartitionBytes(),
+        conf.bucketingMaxBuckets(),
+    )
+
+
+def test_corpus_buckets_small_corpus_is_one_per_core(spark, sf_dir):
+    from data_engineering_project_spotify_app_spark.sources import bucketed
+
+    cores, split, _ = _sizing_conf(spark)
+    assert bucketed.corpus_stat(sf_dir)[1] < split
+    assert bucketed.corpus_buckets(spark, sf_dir) == cores
+
+
+def test_corpus_buckets_large_corpus_is_one_per_split(
+    spark, sf_dir, monkeypatch
+):
+    """A corpus of (3 × cores + ½) splits' bytes gets 3 × cores + 1
+    buckets — the byte total is faked, no large file is written."""
+    from data_engineering_project_spotify_app_spark.sources import bucketed
+
+    cores, split, _ = _sizing_conf(spark)
+    nbytes = 3 * cores * split + split // 2
+    monkeypatch.setattr(bucketed, "corpus_stat", lambda _p: (1, nbytes, 0))
+    assert bucketed.corpus_buckets(spark, sf_dir) == 3 * cores + 1
+
+
+def test_corpus_buckets_capped_at_max_buckets(spark, sf_dir, monkeypatch):
+    from data_engineering_project_spotify_app_spark.sources import bucketed
+
+    _, split, cap = _sizing_conf(spark)
+    monkeypatch.setattr(
+        bucketed, "corpus_stat", lambda _p: (1, (cap + 5) * split, 0)
+    )
+    assert bucketed.corpus_buckets(spark, sf_dir) == cap
+
+
+def test_corpus_landings_share_bucket_count_and_join_exchange_free(
+    spark, sf_dir, tmp_path
+):
+    """minhash_signatures and word_bigrams of one corpus land with the
+    same Num Buckets (corpus_buckets'), so their doc_id join reads
+    co-located buckets: no Exchange in the executed plan (broadcast off
+    so a broadcast cannot stand in for the elision)."""
+    import os
+    import shutil
+
+    from data_engineering_project_spotify_app_spark.sources import bucketed
+
+    corpus = str(tmp_path / "bucket_corpus")
+    os.makedirs(corpus)
+    shutil.copy(f"{sf_dir}/documents.parquet", corpus)
+    sig = dedup._minhash_signatures(spark, corpus)
+    bg = dedup._bigram_grams(spark, corpus)
+
+    def num_buckets(prefix: str) -> int:
+        name = bucketed.landing_table_name(prefix, corpus)
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+        (n,) = [
+            r["data_type"] for r in rows if r["col_name"] == "Num Buckets"
+        ]
+        return int(n)
+
+    want = bucketed.corpus_buckets(spark, corpus)
+    assert num_buckets("minhash_signatures") == want
+    assert num_buckets("word_bigrams") == want
+    saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        joined = sig.join(bg, "doc_id")
+        n = len(joined.collect())
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    assert n == sig.count() > 0
+    assert "Exchange" not in plan, plan
+    for prefix in ("minhash_signatures", "word_bigrams"):
+        name = bucketed.landing_table_name(prefix, corpus)
+        bucketed.drop_landed(spark, name)
+    bucketed.invalidate_landings(corpus)

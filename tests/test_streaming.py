@@ -91,10 +91,35 @@ def test_stage_watch_streams_entity_folder(spark, tmp_path):
     with open(d / "p0.json", "w") as fh:
         for i in range(7):
             fh.write(json.dumps(artist(i)) + "\n")
-    run_to_memory_sink(
-        stage_watch(spark, str(tmp_path / "staging"), "artists"), "t_stage"
-    )
+    clean, _ = stage_watch(spark, str(tmp_path / "staging"), "artists")
+    run_to_memory_sink(clean, "t_stage")
     assert spark.sql("SELECT count(*) AS n FROM t_stage").first()["n"] == 7
+
+
+def test_stage_watch_quarantines_bad_lines(spark, tmp_path):
+    """A truncated line and an un-castable one go whole to the
+    quarantine frame; only the good row reaches the clean sink."""
+    d = tmp_path / "staging" / "artists"
+    d.mkdir(parents=True)
+    truncated = json.dumps(artist(2))[:40]
+    uncastable = json.dumps(artist(3, popularity="not-a-number"))
+    with open(d / "p0.json", "w") as fh:
+        fh.write(json.dumps(artist(1)) + "\n")
+        fh.write(truncated + "\n")
+        fh.write(uncastable + "\n")
+    clean, bad = stage_watch(spark, str(tmp_path / "staging"), "artists")
+    run_to_memory_sink(clean, "t_stage_clean")
+    run_to_memory_sink(bad, "t_stage_bad")
+    got = spark.sql(
+        "SELECT id, name, popularity, genres FROM t_stage_clean"
+    )
+    assert [tuple(r) for r in got.collect()] == [
+        ("ar001", "Artist 1", 17, ["genre1", "genre3"])
+    ]
+    bad_rows = spark.sql("SELECT raw FROM t_stage_bad").collect()
+    assert sorted(r["raw"] for r in bad_rows) == sorted(
+        [truncated, uncastable]
+    )
 
 
 def test_stream_stream_attribution_join(spark, tmp_path):
