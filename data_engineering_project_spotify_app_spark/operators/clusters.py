@@ -8,18 +8,22 @@ the connected component of the candidate-pair graph. The reference's
 only dedup is ``set()`` on ids (app.py:164); clusters are the
 100 TB-corpus generalization the north star asks for.
 
-Spark-first design: connected components is an iterative algorithm, so
-it cannot be one Catalyst plan — it is a driver-side loop of DataFrame
-jobs (each iteration fully distributed; the driver only checks an
-aggregate for convergence). The iteration is min-label propagation
-accelerated with pointer doubling: each round a node adopts the minimum
-label among itself, its graph neighbors, AND the node its current label
-points to — so label chains halve every round and convergence is
-O(log n) rounds rather than O(diameter) (the same shortcutting idea as
-the large-star/small-star MapReduce CC algorithm of Kiveris et al.,
-"Connected Components in MapReduce and Beyond"). Each round is one
-shuffle (groupBy node); labels are localCheckpoint'ed per round to keep
-the lineage flat.
+Spark-first design with a measured driver shortcut: connected
+components is an iterative algorithm, so it cannot be one Catalyst plan.
+``connected_components`` first measures the edge list. When it fits
+Spark's own broadcast budget (the size under which the planner would
+collect a join side to the driver anyway), the components are solved on
+the driver with numpy. Otherwise a driver-side loop of DataFrame jobs
+runs (each iteration fully distributed; the driver only checks an
+aggregate for convergence). Both paths run the same iteration:
+min-label propagation accelerated with pointer doubling — each round a
+node adopts the minimum label among itself, its graph neighbors, AND the
+node its current label points to — so label chains halve every round
+and convergence is O(log n) rounds rather than O(diameter) (the same
+shortcutting idea as the large-star/small-star MapReduce CC algorithm of
+Kiveris et al., "Connected Components in MapReduce and Beyond"). Each
+distributed round is one shuffle (groupBy node); labels are
+localCheckpoint'ed per round to keep the lineage flat.
 
 Both operators remain *exactly* oracle-checkable — the DuckDB twin
 computes the same components with a recursive CTE (transitive-closure
@@ -28,6 +32,8 @@ min propagation), which terminates because UNION deduplicates.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,6 +46,85 @@ from data_engineering_project_spotify_app_spark.operators.registry import query
 from data_engineering_project_spotify_app_spark.tables import table
 
 MAX_CC_ROUNDS = 30  # 2^30 ≫ any real component: a convergence-bug guard
+EDGE_BYTES = 16  # two 8-byte node ids per collected edge
+
+
+def _driver_edge_cap(spark: SparkSession) -> int:
+    """Most edges the driver may collect: Spark's broadcast budget
+    ``min(autoBroadcastJoinThreshold, spark.driver.maxResultSize)`` at
+    EDGE_BYTES per edge (maxResultSize 0 = unlimited). -1 when
+    broadcasting is disabled (threshold -1)."""
+    conf = spark._jsparkSession.sessionState().conf()
+    threshold = conf.autoBroadcastJoinThreshold()
+    if threshold < 0:
+        return -1
+    max_result = spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
+        "spark.driver.maxResultSize", "1g"
+    )
+    if max_result > 0:
+        threshold = min(threshold, max_result)
+    return threshold // EDGE_BYTES
+
+
+def _driver_labels(edges: DataFrame, max_rounds: int) -> DataFrame | None:
+    """(node, lbl) for every edge-touched node, solved in numpy on the
+    driver — or None when the non-null edges exceed _driver_edge_cap
+    (fetched: at most cap + 1 of them) or broadcasting is disabled.
+
+    Same iteration as the distributed loop: labels start at min(self,
+    neighbors), then each round takes the min over neighbors' labels
+    and follows the label pointer (``lbl[lbl]``) until nothing changes.
+    Node ids are densified with np.unique (sorted), so min over dense
+    ids is min over the original ids."""
+    spark = edges.sparkSession
+    cap = _driver_edge_cap(spark)
+    if cap < 0:
+        return None
+    fetched = (
+        edges.select("src", "dst")
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .limit(cap + 1)
+        .toArrow()
+    )
+    if fetched.num_rows > cap:
+        return None
+    src = fetched.column("src").to_numpy()
+    ids, dense = np.unique(
+        np.concatenate([src, fetched.column("dst").to_numpy()]),
+        return_inverse=True,
+    )
+    a, b = dense[: len(src)], dense[len(src) :]
+    lbl = np.arange(len(ids))
+    np.minimum.at(lbl, a, b)
+    np.minimum.at(lbl, b, a)
+    for _ in range(max_rounds):
+        prev = lbl.copy()
+        np.minimum.at(lbl, a, lbl[b])
+        np.minimum.at(lbl, b, lbl[a])
+        lbl = lbl[lbl]
+        if np.array_equal(lbl, prev):
+            break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_rounds} rounds"
+        )
+    id_type = fetched.schema.field("src").type
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "node": pa.array(ids, type=id_type),
+                "lbl": pa.array(ids[lbl], type=id_type),
+            }
+        )
+    )
+
+
+def _with_isolated(nodes: DataFrame, labels: DataFrame) -> DataFrame:
+    # isolated nodes label themselves; the label table is small
+    # (edge-touched nodes only), so this resolves as a broadcast join
+    return nodes.join(labels, "node", "left").select(
+        "node", F.coalesce("lbl", "node").alias("lbl")
+    )
 
 
 def connected_components(
@@ -48,8 +133,14 @@ def connected_components(
     """Min-label connected components: (node) × (src, dst) → (node, lbl).
 
     ``nodes`` has one ``node`` column; ``edges`` is undirected input as
-    (src, dst) in either orientation. Returns one row per node with
-    ``lbl`` = min node id of its component.
+    (src, dst) in either orientation; an edge with a null endpoint
+    connects nothing. Returns one row per node with ``lbl`` = min node
+    id of its component.
+
+    The edges are pinned once (localCheckpoint) — the driver path's
+    fetch and every loop round read them. When the non-null edges fit
+    Spark's broadcast budget, _driver_labels solves the graph in numpy
+    from one fetch; otherwise the distributed loop below runs.
 
     Per round, every node takes the min label over {self} ∪ neighbors ∪
     {current label's node} — the last term is pointer doubling: label
@@ -74,13 +165,15 @@ def connected_components(
     unioned and joined against labels ONCE — neighbor propagation and
     pointer doubling in a single shuffle join rather than two.
 
-    Scale: each round shuffles (node, candidate_lbl) once on node; the
-    edge table is re-read per round (at 100 TB: land it to parquet once
-    — here it is small by construction, LSH candidates not the corpus).
-    localCheckpoint truncates lineage so round N's plan does not replay
-    rounds 1..N-1; on executor loss the job restarts the round, not the
-    whole loop.
+    Scale: each round shuffles (node, candidate_lbl) once on node and
+    re-reads the pinned edge table. localCheckpoint truncates lineage
+    so round N's plan does not replay rounds 1..N-1; on executor loss
+    the job restarts the round, not the whole loop.
     """
+    edges = edges.localCheckpoint(eager=False)
+    small = _driver_labels(edges, max_rounds)
+    if small is not None:
+        return _with_isolated(nodes, small)
     both = edges.select(
         F.col("src").alias("n"), F.col("dst").alias("m")
     ).unionByName(edges.select(F.col("dst").alias("n"), F.col("src").alias("m")))
@@ -91,12 +184,13 @@ def connected_components(
         .agg(F.least(F.min("m"), F.first("n")).alias("lbl"))
         .select(F.col("n").alias("node"), "lbl")
     )
-    # LAZY checkpoint + the convergence-sum collect right after: the
-    # sum action materializes the checkpoint as its side effect, so each
-    # round costs ONE Spark job instead of two (eager checkpoint job +
-    # separate agg job). On the tiny edge-touched label table the loop
-    # is pure per-job overhead, so this halves its wall time (measured
-    # 1.9 -> 1.0 s for the loop at sf0.1, r11 jitter diagnosis).
+    # localCheckpoint(eager=False) does not defer all work: with AQE on
+    # the call itself runs the grouped frame's shuffle-map job (the
+    # adaptive plan materializes its shuffle stages as soon as the
+    # checkpoint asks for the RDD) and the sum collect right after runs
+    # 2 more. Measured jobs: init 3, each round 5 (a 10-node star, init
+    # + 1 round: 8; a 16-node path, init + 5 rounds: 28). With AQE off
+    # the call runs none and each collect one (star 2, path 6).
     labels = labels.localCheckpoint(eager=False)
     prev_sum = labels.agg(F.sum("lbl")).collect()[0][0]
 
@@ -131,11 +225,7 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_rounds} rounds"
         )
-    # isolated nodes label themselves; the loop's label table is small
-    # (edge-touched nodes only), so this resolves as a broadcast join
-    return nodes.join(labels, "node", "left").select(
-        "node", F.coalesce("lbl", "node").alias("lbl")
-    )
+    return _with_isolated(nodes, labels)
 
 
 # Oracle: same components via a recursive CTE — walk(node, lbl) holds
@@ -180,14 +270,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_candidate_pairs(spark, sf_dir).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
-    # checkpoint the edge list once: the CC loop re-references it every
-    # round, and without this each round would rebuild shingles+bands.
-    # LAZY (eager=False): an eager checkpoint runs the whole MinHash
-    # pipeline in a separate pass before the loop's first action
-    # computes anything — deferring materialization to that first
-    # action saves the extra pass (2.41 → 1.97 s min-of-3 at sf0.1,
-    # same-window A/B), and the lineage still truncates on compute
-    pairs = pairs.localCheckpoint(eager=False)
     cc = connected_components(docs, pairs)
     return cc.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
 
@@ -348,9 +430,9 @@ def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined, output bounded by the largest cluster size.
 
     The corpus-total scalar is a driver-side count — cheap to consume
-    twice because connected_components localCheckpoints its label
-    table per round, so the second pass replays a truncated lineage,
-    not the CC loop.
+    twice because connected_components' label table is a driver-built
+    local relation (or, on the distributed path, localCheckpoint'ed per
+    round), so the second pass replays no CC work.
     """
     cc = q_dedup_clusters(spark, sf_dir)
     total = cc.count()

@@ -423,8 +423,9 @@ def _funnel(spark: SparkSession, sf_dir: str, *keys: str) -> DataFrame:
     )
     # ONE CC run shared by the membership join and the keep-best
     # derivation — calling q_dedup_keep_best here would re-run the whole
-    # candidate-pair + connected-components pipeline (a driver-side
-    # loop of separate jobs Catalyst cannot deduplicate) a second time.
+    # candidate-pair + connected-components pipeline (eager jobs at
+    # construction — the edge fetch, or the distributed loop on a large
+    # graph — that Catalyst cannot deduplicate) a second time.
     cc = q_dedup_clusters(spark, sf_dir)
     dl = table(spark, sf_dir, "documents").select(
         "doc_id", F.length("text").alias("len")
