@@ -30,8 +30,11 @@ column pruning can make the two exchange subtrees differ, and with
 AQE off the sweep caught exactly that (q_lorenz_curve's cumulative
 shares shifted with the shuffle-partition count — offsets computed
 against one sampling, local ranks against another). The ranged frame
-is therefore pinned behind a lazy localCheckpoint: ONE execution, one
-boundary sampling, shared by both consumers under every config. The
+is therefore pinned behind ``localCheckpoint(eager=False)``: ONE
+execution, one boundary sampling, shared by both consumers under every
+config. The pin is lazy only with AQE off; with AQE on (the default)
+the range exchange's shuffle stage runs at the pin call itself
+(pinutil's module doc). The
 pre-checkpoint plan shape is pinned by tests/test_plans.py through
 ``ranged_by`` (the checkpoint hides it from consumer explains).
 """
@@ -78,7 +81,7 @@ def two_phase_global_rank(
     and ``n`` (total row count) to ``df`` without a single-partition
     window. ``order_cols`` must be a total order over ``df``'s rows.
     """
-    # lazy localCheckpoint: ONE execution of the randomly-sampled range
+    # localCheckpoint: ONE execution of the randomly-sampled range
     # exchange, so the count consumer and the window consumer can never
     # see different boundaries (module docstring; the blocks are owned
     # by the RDD and freed with it — the ADVICE-r9 cache discipline)

@@ -824,11 +824,12 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # The brute-force truth set is consumed THREE times (one left join
     # per method report + the n_truth scalar); without materialization
-    # each consumer re-runs the full queries×corpus scan — the plan
-    # audit showed the Window+WindowGroupLimit brute-force subtree four
-    # times (plans/r14/). The frame is tiny (N_QUERIES × TOPK rows), so
-    # a lazy localCheckpoint computes it once and every consumer reads
-    # blocks (guide §2.4: remove repeated subtrees outright).
+    # each consumer re-runs the full queries×corpus scan — a plan audit
+    # (scripts/plan_audit.py) showed the Window+WindowGroupLimit
+    # brute-force subtree four times. The frame is tiny (N_QUERIES ×
+    # TOPK rows), so a localCheckpoint computes it once and every
+    # consumer reads blocks (guide §2.4: remove repeated subtrees
+    # outright).
     exact = (
         q_cosine_topk(spark, sf_dir)
         .select("query_id", "neighbor_id", F.lit(1).alias("hit"))

@@ -48,7 +48,7 @@ from data_engineering_project_spotify_app_spark.streaming.delta_chain import (
     DeltaChainStore,
 )
 from data_engineering_project_spotify_app_spark.streaming.sinks import (
-    resolve_checkpoint,
+    is_committed,
 )
 
 VEC_SCHEMA = "vec_id long, embedding array<double>"
@@ -140,34 +140,17 @@ class StreamingIvfIndexSink(DeltaChainStore):
         centroids: DataFrame,
         auto_compact_every: int | None = None,
     ) -> None:
-        self.spark = spark
-        self.out_dir = out_dir
+        super().__init__(spark, out_dir, auto_compact_every=auto_compact_every)
         self.centroids = centroids
-        self.auto_compact_every = auto_compact_every
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        delta_dir = self._delta_dir(epoch_id)
-        base = self._base_epoch()
-        if self._committed(delta_dir) or (
-            base is not None and base >= epoch_id
-        ):
+        if self._done(epoch_id):
             return  # replayed epoch: delta durable (or folded)
-        # within-batch dedup + cross-epoch duplicate guard: a vec_id
-        # re-delivered by a backfill must not produce a second index
-        # row (duplicate rows would double-emit a neighbor and evict a
-        # true top-k hit — breaking the ==batch-q_ann_ivf contract).
-        # The guard probes the STORE for the batch's ids: the batch-id
-        # frame is tiny and broadcast into a semi-join, so on a store
-        # table bucketed by vec_id this is a pruned probe, not a scan.
-        n = _normed(batch_df).dropDuplicates(["vec_id"])
-        store = self.read_store(before_epoch=epoch_id)
-        if store is not None:
-            already = store.select("vec_id").join(
-                F.broadcast(n.select("vec_id")), "vec_id", "leftsemi"
-            )
-            n = n.join(F.broadcast(already), "vec_id", "left_anti")
-        _assign(n, self.centroids).write.mode("overwrite").parquet(delta_dir)
-        self._mark(delta_dir)
+        # a re-delivered vec_id must not produce a second index row
+        # (it would double-emit a neighbor and evict a true top-k hit —
+        # breaking the ==batch-q_ann_ivf contract)
+        n = self._unseen(_normed(batch_df), epoch_id, key="vec_id")
+        self._commit(_assign(n, self.centroids), self._delta_dir(epoch_id))
         self.maybe_compact()
 
     def current_index(self) -> DataFrame | None:
@@ -240,11 +223,10 @@ class StreamingIvfIndexSink(DeltaChainStore):
         target = max(epochs + ([base] if base is not None else []))
         new_sink = StreamingIvfIndexSink(self.spark, out_dir, centroids)
         os.makedirs(out_dir, exist_ok=True)
-        base_dir = new_sink._base_dir(target)
-        _assign(index.select("vec_id", "v", "nrm"), centroids).write.mode(
-            "overwrite"
-        ).parquet(base_dir)
-        new_sink._mark(base_dir)
+        new_sink._commit(
+            _assign(index.select("vec_id", "v", "nrm"), centroids),
+            new_sink._base_dir(target),
+        )
         return new_sink
 
     def catch_up(self, old_sink: "StreamingIvfIndexSink") -> list[int]:
@@ -267,40 +249,13 @@ class StreamingIvfIndexSink(DeltaChainStore):
             if base is not None and e <= base:
                 continue  # already folded into the rebuilt base
             delta_dir = self._delta_dir(e)
-            if self._committed(delta_dir):
+            if is_committed(delta_dir):
                 continue  # a crashed catch_up already landed it
             rows = self.spark.read.parquet(old_sink._delta_dir(e))
-            _assign(
-                rows.select("vec_id", "v", "nrm"), self.centroids
-            ).write.mode("overwrite").parquet(delta_dir)
-            self._mark(delta_dir)
+            self._commit(
+                _assign(rows.select("vec_id", "v", "nrm"), self.centroids),
+                delta_dir,
+            )
             caught.append(e)
         return caught
 
-
-def maintain_ivf_index(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    out_dir: str,
-    name: str,
-    centroids: DataFrame,
-    checkpoint_dir: str | None = None,
-    auto_compact_every: int | None = None,
-):
-    """Attach the IVF index maintainer to a vector stream; returns
-    (query, sink) so callers use ``sink.search()`` /
-    ``sink.current_index()``. checkpointLocation is always set — see
-    resolve_checkpoint."""
-    sink = StreamingIvfIndexSink(
-        spark, out_dir, centroids, auto_compact_every=auto_compact_every
-    )
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(name)
-        .option(
-            "checkpointLocation", resolve_checkpoint(out_dir, checkpoint_dir)
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    return q, sink

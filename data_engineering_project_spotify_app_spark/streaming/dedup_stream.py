@@ -19,35 +19,32 @@ quadratic cumulative). compact() folds committed deltas into a base so
 the union read stays a bounded file count — the same job a
 transactional table's compaction runs at 100 TB.
 
-Exactly-once falls out of the commit-marker contract shared with
-IncrementalRollupSink: pairs log and band delta each carry a
-``_COMMITTED`` marker keyed by epoch id (pairs marked FIRST, so a
-committed delta implies durable pairs — what makes compacting
-committed deltas replay-safe); a replayed epoch sees its markers and
-skips, a half-finished epoch left no marker and the retry overwrites
-the same path. The union of all committed pairs logs equals the batch
-``q_minhash_lsh`` pair set exactly — every (doc_a, doc_b) pair is
-emitted in precisely the epoch its LATER member arrives (equivalence
-pinned across micro-batch splits in tests/test_streaming_dedup.py).
+Exactly-once falls out of the commit-marker contract (sinks.py):
+pairs log and band delta each carry a commit marker keyed by epoch id
+(pairs marked FIRST, so a committed delta implies durable pairs — what
+makes compacting committed deltas replay-safe); a replayed epoch sees
+its markers and skips, a half-finished epoch left no marker and the
+retry overwrites the same path. The epoch body is
+delta_chain.PairLogStore's, shared with the winnowing sink. The union
+of all committed pairs logs equals the batch ``q_minhash_lsh`` pair set
+exactly — every (doc_a, doc_b) pair is emitted in precisely the epoch
+its LATER member arrives (equivalence pinned across micro-batch splits
+in tests/test_streaming_dedup.py).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from data_engineering_project_spotify_app_spark.operators.dedup import (
     lsh_bands_df,
     minhash_signatures_df,
 )
 from data_engineering_project_spotify_app_spark.streaming.delta_chain import (
-    DeltaChainStore,
-    delta_pairs,
+    PairLogStore,
 )
 from data_engineering_project_spotify_app_spark.streaming.sinks import (
-    resolve_checkpoint,
+    listed_ids,
 )
 
 DOC_SCHEMA = "doc_id long, text string"
@@ -66,11 +63,11 @@ def stream_documents(
     )
 
 
-class StreamingLshDedupSink(DeltaChainStore):
+class StreamingLshDedupSink(PairLogStore):
     """foreachBatch maintainer of the LSH band store + pairs log.
-    Store machinery (delta chain, base, compaction) lives in
-    DeltaChainStore; this class owns the per-epoch pipeline and the
-    pairs output log.
+    Store machinery (delta chain, base, compaction, the pair-log epoch)
+    lives in delta_chain.PairLogStore; this class supplies the band
+    derivation and keys.
 
     ``bucket_cap``, when set, applies the streaming skew guard at every
     epoch (see delta_chain.delta_pairs). Streaming cap semantics are
@@ -93,156 +90,25 @@ class StreamingLshDedupSink(DeltaChainStore):
         dedupe_guard: bool = True,
         auto_compact_every: int | None = None,
     ) -> None:
-        self.spark = spark
-        self.out_dir = out_dir
+        super().__init__(spark, out_dir, dedupe_guard, auto_compact_every)
         self.bucket_cap = bucket_cap
-        self.dedupe_guard = dedupe_guard
-        self.auto_compact_every = auto_compact_every
-
-    def _pairs_dir(self, epoch_id: int) -> str:
-        return os.path.join(self.out_dir, f"pairs_e{epoch_id}")
 
     def committed_band_versions(self) -> list[int]:
         return self.committed_delta_epochs()
 
     def committed_pair_epochs(self) -> list[int]:
-        return self._committed_ids("pairs_e")
+        return listed_ids(self.out_dir, "pairs_e")
 
     def current_bands(self) -> DataFrame | None:
         return self.read_store()
 
-    def pairs(self) -> DataFrame | None:
-        """The pairs output log (folded base + per-epoch logs newer
-        than it) — the streamed equivalent of the batch q_minhash_lsh
-        result. Every pair lands in exactly one epoch (the guard's
-        job), so the fold is a plain union."""
-        return self.read_log("pairs_e")
-
-    def compact(self) -> list[int]:
-        """Fold the band-store chain (inherited), then fold the pairs
-        output logs to the same target — the per-epoch log family would
-        otherwise grow one tiny dir per epoch forever (the ids_e growth
-        pattern, fixed the same way)."""
-        folded = super().compact()
-        target = self._base_epoch()
-        if target is not None:
-            self.fold_log("pairs_e", target)
-        return folded
-
-    # Marker order inside an epoch: pairs FIRST, then the band delta —
-    # so a committed delta implies its pairs are durable, which is what
-    # makes compacting committed deltas replay-safe.
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        pairs_dir = self._pairs_dir(epoch_id)
-        delta_dir = self._delta_dir(epoch_id)
-        base = self._base_epoch()
-        delta_done = self._committed(delta_dir) or (
-            base is not None and base >= epoch_id
-        )
-        pairs_base = self._log_base_epoch("pairs_e")
-        pairs_done = self._committed(pairs_dir) or (
-            pairs_base is not None and pairs_base >= epoch_id
-        )
-        if pairs_done and delta_done:
-            return  # replayed epoch: both outputs durable (or folded)
-        # Shingle + minhash the batch ONCE: the delta parquet is the
-        # materialization both consumers (pair generation and the store
-        # chain) read, so the signature aggregation never runs twice.
-        if self._committed(delta_dir):
-            bands_new = self.spark.read.parquet(delta_dir)
-        else:
-            # within-batch dedup + cross-epoch duplicate guard (mirror
-            # of the ANN sink's): a doc_id re-delivered by a backfill
-            # must not append a second set of band rows — duplicates
-            # would re-emit already-logged pairs and inflate
-            # n_bands_matched, breaking the "union of pair logs ==
-            # batch pair set" contract. COST MODEL, stated honestly:
-            # the probe reads the store's doc_id column every epoch —
-            # a single-column (column-pruned) parquet scan, O(store
-            # rows) per epoch on this format-free delta chain. That is
-            # the price of tolerating re-delivery; at 100 TB the store
-            # is a table bucketed/indexed by doc_id where the broadcast
-            # semi probe prunes to matching buckets. Pipelines whose
-            # ingest guarantees at-most-once doc_ids can construct the
-            # sink with dedupe_guard=False and skip the probe entirely.
-            # (Measured: per-epoch wall stays flat at a 160k-band store
-            # — scripts/stream_probe.py — so the guard is I/O-cheap at
-            # any local scale.)
-            docs = batch_df.dropDuplicates(["doc_id"])
-            guard_paths = (
-                self._store_paths(before_epoch=epoch_id)
-                if self.dedupe_guard
-                else []
-            )
-            if guard_paths:
-                store_ids = self.spark.read.parquet(*guard_paths)
-                already = (
-                    store_ids.select("doc_id")
-                    .join(
-                        F.broadcast(docs.select("doc_id")),
-                        "doc_id",
-                        "leftsemi",
-                    )
-                    .distinct()
-                )
-                docs = docs.join(F.broadcast(already), "doc_id", "left_anti")
-            bands_new = lsh_bands_df(minhash_signatures_df(docs))
-            bands_new.write.mode("overwrite").parquet(delta_dir)
-            bands_new = self.spark.read.parquet(delta_dir)
-        if not pairs_done:
-            store_paths = self._store_paths(before_epoch=epoch_id)
-            store = (
-                self.spark.read.parquet(*store_paths)
-                if store_paths
-                else None
-            )
-            delta_pairs(
-                bands_new,
-                store,
-                ["band", "band_key"],
-                "n_bands_matched",
-                self.bucket_cap,
-            ).write.mode("overwrite").parquet(pairs_dir)
-            self._mark(pairs_dir)
-        if not delta_done:
-            self._mark(delta_dir)
-        self.maybe_compact()
-
-
-def maintain_lsh_store(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    out_dir: str,
-    name: str,
-    bucket_cap: int | None = None,
-    checkpoint_dir: str | None = None,
-    dedupe_guard: bool = True,
-    auto_compact_every: int | None = None,
-):
-    """Attach the streaming dedup maintainer to a document stream;
-    returns (query, sink) so callers read ``sink.pairs()`` /
-    ``sink.current_bands()``.
-
-    A checkpointLocation is ALWAYS set (default: ``out_dir/_checkpoint``)
-    — the commit-marker contract needs durable, monotone epoch ids. A
-    checkpoint-less restart re-lists the source with epoch ids reset to
-    0, landing NEW files on epoch ids whose markers already exist from
-    the prior run: __call__ would skip them as replays — silent data
-    loss, not replay safety (pinned by the restart test)."""
-    sink = StreamingLshDedupSink(
-        spark,
-        out_dir,
-        bucket_cap=bucket_cap,
-        dedupe_guard=dedupe_guard,
-        auto_compact_every=auto_compact_every,
-    )
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(name)
-        .option(
-            "checkpointLocation", resolve_checkpoint(out_dir, checkpoint_dir)
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    return q, sink
+        if self._pair_epoch(
+            batch_df,
+            epoch_id,
+            lambda docs: lsh_bands_df(minhash_signatures_df(docs)),
+            ["band", "band_key"],
+            "n_bands_matched",
+            self.bucket_cap,
+        ):
+            self.maybe_compact()

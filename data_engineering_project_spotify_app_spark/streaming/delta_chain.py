@@ -1,7 +1,7 @@
-"""Append-only delta-chain store machinery shared by the streaming
-dedup sinks (dedup_stream.py, linedup_stream.py, winnow_stream.py), and
-the delta-only pair generator (``delta_pairs``) the LSH and winnowing
-sinks run each epoch.
+"""Append-only delta-chain store machinery shared by every streaming
+maintainer that keeps O(corpus) state (the dedup, ANN and landing
+sinks), with the delta-only pair generator (``delta_pairs``) and the
+pair-log epoch the LSH and winnowing sinks run.
 
 Layout inside ``out_dir``:
 
@@ -14,27 +14,33 @@ Layout inside ``out_dir``:
   <= B. compact() folds committed deltas into a new base so the union
   read stays a bounded file count — the job a transactional table's
   compaction runs at 100 TB.
-- ``_COMMITTED`` marker files gate visibility: readers see only marked
+- ``{log}{N}`` / ``{log}_base{B}``: secondary per-epoch log families
+  (guard ids, pair and document outputs) with the same fold-into-base
+  treatment, folded to the store's target on every compact().
+- commit markers (sinks.py) gate visibility: readers see only marked
   directories, and ignore deltas <= the base epoch even if a crashed
   compaction sweep left them behind.
 
 Epoch ids must be durable and monotone for the marker contract to give
-exactly-once — which is why the ``maintain_*`` helpers always set a
-``checkpointLocation``: without one, a restarted query re-lists the
-source and restarts epoch ids at 0, landing new data on epoch ids
-whose markers already exist — silent data loss, not replay safety.
+exactly-once — see sinks.attach.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_engineering_project_spotify_app_spark.functions.pairs import (
     sorted_pairs,
+)
+from data_engineering_project_spotify_app_spark.streaming.sinks import (
+    is_committed,
+    listed_ids,
+    mark_committed,
 )
 
 
@@ -109,50 +115,76 @@ def delta_pairs(
 
 
 class DeltaChainStore:
-    """Mixin: subclasses set ``DELTA_PREFIX``/``BASE_PREFIX`` and
-    provide ``self.spark`` and ``self.out_dir``."""
+    """Base of the delta-chain sinks: subclasses set ``DELTA_PREFIX``
+    (and ``LOGS``, their secondary log families) and implement
+    ``__call__(batch_df, epoch_id)`` from the protocol pieces below —
+    ``_done`` (replay check), ``_unseen`` (re-delivery guard) and
+    ``_commit`` (data, then marker)."""
 
     DELTA_PREFIX = "delta_e"
     BASE_PREFIX = "base_v"
+    # log family prefix -> whether compaction deduplicates its fold
+    # (set-valued logs: guard keys, edges)
+    LOGS: dict[str, bool] = {}
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        out_dir: str,
+        dedupe_guard: bool = True,
+        auto_compact_every: int | None = None,
+    ) -> None:
+        self.spark = spark
+        self.out_dir = out_dir
+        self.dedupe_guard = dedupe_guard
+        self.auto_compact_every = auto_compact_every
+
+    # an attribute every commit goes through, so fault-injection tests
+    # can kill a sink at a chosen commit boundary
+    _mark = staticmethod(mark_committed)
+
+    def _commit(self, df: DataFrame, path: str) -> None:
+        df.write.mode("overwrite").parquet(path)
+        self._mark(path)
+
+    def _log_dir(self, prefix: str, epoch_or_version: int) -> str:
+        return os.path.join(self.out_dir, f"{prefix}{epoch_or_version}")
 
     def _delta_dir(self, epoch_id: int) -> str:
-        return os.path.join(self.out_dir, f"{self.DELTA_PREFIX}{epoch_id}")
+        return self._log_dir(self.DELTA_PREFIX, epoch_id)
 
     def _base_dir(self, version: int) -> str:
-        return os.path.join(self.out_dir, f"{self.BASE_PREFIX}{version}")
+        return self._log_dir(self.BASE_PREFIX, version)
 
-    def _committed(self, path: str) -> bool:
-        return os.path.exists(os.path.join(path, "_COMMITTED"))
+    @staticmethod
+    def _log_base_prefix(prefix: str) -> str:
+        # "ids_e" -> "ids_base", "docs_e" -> "docs_base"
+        assert prefix.endswith("_e"), prefix
+        return prefix[:-2] + "_base"
 
-    def _mark(self, path: str) -> None:
-        with open(os.path.join(path, "_COMMITTED"), "w") as fh:
-            fh.write("ok\n")
-
-    def _committed_ids(self, prefix: str) -> list[int]:
-        if not os.path.isdir(self.out_dir):
-            return []
-        return sorted(
-            int(n[len(prefix):])
-            for n in os.listdir(self.out_dir)
-            if n.startswith(prefix)
-            and n[len(prefix):].isdigit()
-            and self._committed(os.path.join(self.out_dir, n))
-        )
-
-    def _all_ids(self, prefix: str) -> list[int]:
-        """Like _committed_ids but including UNMARKED directories —
-        compaction's sweep uses this to reclaim crash garbage."""
-        if not os.path.isdir(self.out_dir):
-            return []
-        return sorted(
-            int(n[len(prefix):])
-            for n in os.listdir(self.out_dir)
-            if n.startswith(prefix) and n[len(prefix):].isdigit()
-        )
+    def _last_id(self, prefix: str) -> int | None:
+        ids = listed_ids(self.out_dir, prefix)
+        return ids[-1] if ids else None
 
     def _base_epoch(self) -> int | None:
-        bases = self._committed_ids(self.BASE_PREFIX)
-        return bases[-1] if bases else None
+        return self._last_id(self.BASE_PREFIX)
+
+    def _chain(self, log: str | None) -> tuple[str, str]:
+        """(per-epoch prefix, base prefix) of the store (``log`` None)
+        or of a log family."""
+        if log is None:
+            return self.DELTA_PREFIX, self.BASE_PREFIX
+        return log, self._log_base_prefix(log)
+
+    def _done(self, epoch_id: int, log: str | None = None) -> bool:
+        """Replay check: epoch ``epoch_id``'s store delta (or its entry
+        in log family ``log``) is durable — committed, or already
+        folded into the base."""
+        prefix, base_prefix = self._chain(log)
+        base = self._last_id(base_prefix)
+        return is_committed(self._log_dir(prefix, epoch_id)) or (
+            base is not None and base >= epoch_id
+        )
 
     def committed_delta_epochs(self) -> list[int]:
         """Committed delta epochs not yet folded into the base
@@ -161,36 +193,92 @@ class DeltaChainStore:
         base = self._base_epoch()
         return [
             v
-            for v in self._committed_ids(self.DELTA_PREFIX)
+            for v in listed_ids(self.out_dir, self.DELTA_PREFIX)
             if base is None or v > base
         ]
 
-    def _store_paths(self, before_epoch: int | None = None) -> list[str]:
-        base = self._base_epoch()
+    def _paths(
+        self, log: str | None, before_epoch: int | None
+    ) -> list[str]:
+        prefix, base_prefix = self._chain(log)
+        base = self._last_id(base_prefix)
         paths = []
         if base is not None:
             if before_epoch is not None and base >= before_epoch:
                 raise ValueError(
-                    f"store as of epoch {before_epoch} is not "
-                    f"reconstructible: {self.BASE_PREFIX}{base} already "
+                    f"{prefix} chain as of epoch {before_epoch} is not "
+                    f"reconstructible: {base_prefix}{base} already "
                     "folded it in (retry of a compacted epoch — compact "
-                    "only epochs whose output logs are durable)"
+                    "only epochs whose outputs are durable)"
                 )
-            paths.append(self._base_dir(base))
+            paths.append(self._log_dir(base_prefix, base))
         paths += [
-            self._delta_dir(v)
-            for v in self.committed_delta_epochs()
-            if before_epoch is None or v < before_epoch
+            self._log_dir(prefix, e)
+            for e in listed_ids(self.out_dir, prefix)
+            if (base is None or e > base)
+            and (before_epoch is None or e < before_epoch)
         ]
         return paths
+
+    def _read(
+        self, log: str | None, before_epoch: int | None
+    ) -> DataFrame | None:
+        paths = self._paths(log, before_epoch)
+        return self.spark.read.parquet(*paths) if paths else None
 
     def read_store(self, before_epoch: int | None = None) -> DataFrame | None:
         """The store as of ``before_epoch`` (exclusive), or the full
         current store: base + committed deltas, union-read."""
-        paths = self._store_paths(before_epoch)
-        if not paths:
-            return None
-        return self.spark.read.parquet(*paths)
+        return self._read(None, before_epoch)
+
+    def read_log(
+        self, prefix: str, before_epoch: int | None = None
+    ) -> DataFrame | None:
+        """A log family's committed dirs, union-read: folded base + the
+        per-epoch logs newer than it (only epochs < ``before_epoch``
+        when given — the guard-probe shape)."""
+        return self._read(prefix, before_epoch)
+
+    def _unseen(
+        self,
+        batch: DataFrame,
+        epoch_id: int,
+        key: str = "doc_id",
+        log: str | None = None,
+        rows: list[str] | None = None,
+        on_seen: Callable[[DataFrame, DataFrame], None] | None = None,
+    ) -> DataFrame:
+        """Re-delivery guard: ``batch`` without in-batch duplicates of
+        ``rows`` (default ``[key]``) and, with ``dedupe_guard``, without
+        the rows whose ``key`` the store (or log family ``log``) already
+        holds from epochs before ``epoch_id``. A backfill re-delivering
+        stored keys must not append a second set of rows: duplicates
+        would re-emit logged pairs, double an index row or re-log a
+        document. ``on_seen(batch, seen_keys)`` runs before the re-seen
+        rows are dropped.
+
+        COST MODEL, stated honestly: the probe reads the key column of
+        the store or log every epoch — a single-column (column-pruned)
+        parquet scan, O(rows stored) per epoch on this format-free
+        layout (compaction keeps its file count bounded). The batch's
+        distinct keys are tiny and broadcast into a semi-join, so on a
+        table bucketed by key at 100 TB the probe prunes to the matching
+        buckets. Pipelines whose ingest is at-most-once construct the
+        sink with ``dedupe_guard=False`` and skip the probe."""
+        batch = batch.dropDuplicates(rows or [key])
+        if not self.dedupe_guard:
+            return batch
+        prior = self._read(log, epoch_id)
+        if prior is None:
+            return batch
+        seen = (
+            prior.select(key)
+            .join(F.broadcast(batch.select(key).distinct()), key, "leftsemi")
+            .distinct()
+        )
+        if on_seen is not None:
+            on_seen(batch, seen)
+        return batch.join(F.broadcast(seen), key, "left_anti")
 
     # ---- size-triggered auto-compaction ----
     #
@@ -206,73 +294,18 @@ class DeltaChainStore:
     # sweeps.
 
     def maybe_compact(self) -> bool:
-        n = getattr(self, "auto_compact_every", None)
+        n = self.auto_compact_every
         if n and len(self.committed_delta_epochs()) >= n:
             self.compact()
             return True
         return False
 
-    # ---- secondary per-epoch log families (guard ids, output docs) ----
-    #
-    # Several sinks keep a SECOND per-epoch log family next to the store
-    # deltas (exact_stream's ids_e duplicate-guard logs, linedup_stream's
-    # docs_e cleaned-document logs). Without their own compaction these
-    # grow one tiny parquet dir per epoch forever — unbounded file count
-    # and listing cost over a long-lived stream even after the store
-    # chain is compacted. The helpers below give any ``{prefix}{N}``
-    # family the same fold-into-base treatment: logs are union-mergeable
-    # by construction (a set of ids / a bag of doc rows), so folding
-    # epochs <= the store's own compaction target into one
-    # ``{family}_base{target}`` dir preserves every reader's view.
-    # Replay safety mirrors the store chain: an epoch <= the fold target
-    # has a committed (now folded) store delta, so its replay returns at
-    # the base check before ever reading the folded logs.
-
-    def _log_dir(self, prefix: str, epoch_or_version: int) -> str:
-        return os.path.join(self.out_dir, f"{prefix}{epoch_or_version}")
-
-    @staticmethod
-    def _log_base_prefix(prefix: str) -> str:
-        # "ids_e" -> "ids_base", "docs_e" -> "docs_base"
-        assert prefix.endswith("_e"), prefix
-        return prefix[:-2] + "_base"
-
-    def _log_base_epoch(self, prefix: str) -> int | None:
-        bases = self._committed_ids(self._log_base_prefix(prefix))
-        return bases[-1] if bases else None
-
-    def log_paths(
-        self, prefix: str, before_epoch: int | None = None
-    ) -> list[str]:
-        """Committed log dirs of a family: folded base + per-epoch logs
-        newer than it (optionally only epochs < ``before_epoch`` — the
-        guard-probe shape)."""
-        base = self._log_base_epoch(prefix)
-        paths = []
-        if base is not None:
-            if before_epoch is not None and base >= before_epoch:
-                raise ValueError(
-                    f"{prefix} log as of epoch {before_epoch} is not "
-                    f"reconstructible: {self._log_base_prefix(prefix)}"
-                    f"{base} already folded it in (fold only epochs "
-                    "whose store deltas are committed)"
-                )
-            paths.append(self._log_dir(self._log_base_prefix(prefix), base))
-        paths += [
-            self._log_dir(prefix, e)
-            for e in self._committed_ids(prefix)
-            if (base is None or e > base)
-            and (before_epoch is None or e < before_epoch)
-        ]
-        return paths
-
-    def read_log(
-        self, prefix: str, before_epoch: int | None = None
-    ) -> DataFrame | None:
-        paths = self.log_paths(prefix, before_epoch)
-        if not paths:
-            return None
-        return self.spark.read.parquet(*paths)
+    def _sweep(self, prefix: str, keep: int, below: bool = True) -> None:
+        """Remove every ``{prefix}N`` dir, marked or not, with N <=
+        ``keep`` (``below``) or N != ``keep`` (superseded bases)."""
+        for n in listed_ids(self.out_dir, prefix, committed=False):
+            if (n <= keep) if below else (n != keep):
+                shutil.rmtree(self._log_dir(prefix, n), ignore_errors=True)
 
     def fold_log(self, prefix: str, target: int, transform=None) -> None:
         """Fold the family's committed logs <= ``target`` (plus the
@@ -280,14 +313,15 @@ class DeltaChainStore:
         the compact() style (new base commits before any delete, and
         the sweep reclaims debris from previously crashed folds).
         ``transform`` (e.g. a distinct()) may compress the union — it
-        must preserve every reader's view of the log contents."""
-        import shutil as _shutil
-
+        must preserve every reader's view of the log contents. Replay
+        safety mirrors the store chain: an epoch <= the fold target has
+        a committed (now folded) store delta, so its replay returns at
+        the replay check before ever reading the folded logs."""
         base_prefix = self._log_base_prefix(prefix)
-        base = self._log_base_epoch(prefix)
+        base = self._last_id(base_prefix)
         fresh = [
             e
-            for e in self._committed_ids(prefix)
+            for e in listed_ids(self.out_dir, prefix)
             if (base is None or e > base) and e <= target
         ]
         if fresh:
@@ -296,68 +330,109 @@ class DeltaChainStore:
             df = self.spark.read.parquet(*paths)
             if transform is not None:
                 df = transform(df)
-            new_base = max(fresh)
-            df.write.mode("overwrite").parquet(
-                self._log_dir(base_prefix, new_base)
-            )
-            self._mark(self._log_dir(base_prefix, new_base))
-        else:
-            new_base = base
-            if new_base is None:
-                return
-        for e in self._all_ids(prefix):
-            if e <= new_base:
-                _shutil.rmtree(self._log_dir(prefix, e), ignore_errors=True)
-        for b in self._all_ids(base_prefix):
-            if b != new_base:
-                _shutil.rmtree(
-                    self._log_dir(base_prefix, b), ignore_errors=True
-                )
+            base = max(fresh)
+            self._commit(df, self._log_dir(base_prefix, base))
+        elif base is None:
+            return
+        self._sweep(prefix, base)
+        self._sweep(base_prefix, base, below=False)
+
+    def _stage(self, df: DataFrame, epoch_id: int) -> DataFrame:
+        """Materialize an epoch's derivation once for two consumers:
+        written to ``staged_e{N}`` and read back. ``_unstage`` removes it
+        when the epoch is durable; compact() sweeps what a crash
+        strands."""
+        path = self._log_dir("staged_e", epoch_id)
+        df.write.mode("overwrite").parquet(path)
+        return self.spark.read.parquet(path)
+
+    def _unstage(self, epoch_id: int) -> None:
+        shutil.rmtree(self._log_dir("staged_e", epoch_id), ignore_errors=True)
+
+    def _compacted(self) -> DataFrame:
+        """The frame compact() writes as the new base."""
+        return self.read_store()
 
     def compact(self) -> list[int]:
-        """Fold every committed delta into a new base; the sinks'
-        output logs (pairs/docs) are never touched. Crash-safe AND
-        leak-free: the new base commits before anything is deleted, and
-        the sweep removes every delta directory (marked or not) <= the
-        new base plus every older base — so garbage from a previously
-        crashed sweep is reclaimed by the next compact. An unmarked
-        delta <= the base can only be crash debris: with a checkpointed
-        query, epoch N+1 never starts before epoch N's delta committed.
-        Returns the folded delta epochs."""
+        """Fold every committed delta into a new base, then fold each
+        ``LOGS`` family to the same target. Crash-safe AND leak-free:
+        the new base commits before anything is deleted, and the sweep
+        removes every delta directory (marked or not) <= the new base
+        plus every older base — so garbage from a previously crashed
+        sweep is reclaimed by the next compact, even one with nothing
+        new to fold. An unmarked delta <= the base can only be crash
+        debris: with a checkpointed query, epoch N+1 never starts
+        before epoch N's delta committed. Returns the folded delta
+        epochs."""
         deltas = self.committed_delta_epochs()
         if deltas:
-            target = max(deltas)
-            self.read_store().write.mode("overwrite").parquet(
-                self._base_dir(target)
-            )
-            self._mark(self._base_dir(target))
-        else:
-            # nothing new to fold — but still run the sweep below so
-            # debris from a previously CRASHED sweep (folded deltas and
-            # superseded bases left on disk) is reclaimed rather than
-            # leaking until new epochs happen to arrive
-            target = self._base_epoch()
-            if target is None:
-                return []
-        for v in self._all_ids(self.DELTA_PREFIX):
-            if v <= target:
-                shutil.rmtree(self._delta_dir(v), ignore_errors=True)
-        for b in self._all_ids(self.BASE_PREFIX):
-            # every other base — marked ones are superseded, unmarked
-            # ones are debris from a crashed base write
-            if b != target:
-                shutil.rmtree(self._base_dir(b), ignore_errors=True)
-        # staging debris: sinks that materialize an epoch's derivation
-        # once for two consumers (linedup_stream, the basket sink) stage
-        # it to staged_e{N} and rmtree on success — a crash between the
-        # last marker and that rmtree strands the staged dir, and the
-        # delta/base sweep above never names it. Any staged dir at or
+            self._commit(self._compacted(), self._base_dir(max(deltas)))
+        target = self._base_epoch()
+        if target is None:
+            return []
+        self._sweep(self.DELTA_PREFIX, target)
+        self._sweep(self.BASE_PREFIX, target, below=False)
+        # staging debris (_stage): a crash between an epoch's last marker
+        # and its _unstage strands the staged dir. Any staged dir at or
         # below the folded base belongs to a fully-durable epoch that
-        # will never be replayed, so it is reclaimable here (ADVICE r9).
-        for s in self._all_ids("staged_e"):
-            if s <= target:
-                shutil.rmtree(
-                    os.path.join(self.out_dir, f"staged_e{s}"),
-                    ignore_errors=True,
-                )
+        # will never be replayed, so it is reclaimable here.
+        self._sweep("staged_e", target)
+        for prefix, dedupe in self.LOGS.items():
+            self.fold_log(
+                prefix, target, (lambda df: df.distinct()) if dedupe else None
+            )
         return deltas
+
+
+class PairLogStore(DeltaChainStore):
+    """A delta-chain store plus a ``pairs_e`` candidate-pair log: the
+    LSH (dedup_stream.py) and winnowing (winnow_stream.py) sinks. Every
+    pair lands in exactly one epoch — the one its LATER member arrives
+    in — so the union of the pair logs equals the batch pair set."""
+
+    LOGS = {"pairs_e": False}
+
+    def pairs(self) -> DataFrame | None:
+        """The pairs output log (folded base + per-epoch logs newer
+        than it). Every pair lands in exactly one epoch (the guard's
+        job), so the fold is a plain union."""
+        return self.read_log("pairs_e")
+
+    def _pair_epoch(
+        self,
+        batch_df: DataFrame,
+        epoch_id: int,
+        derive: Callable[[DataFrame], DataFrame],
+        keys: list[str],
+        count_col: str,
+        cap: int | None,
+    ) -> bool:
+        """One epoch: ``derive`` the (doc_id, *keys) delta from the
+        batch's unseen docs and stage it, log the pairs it forms with
+        itself and the store (delta_pairs, skew-capped at ``cap``), then
+        mark the pairs and THEN the delta — a committed delta implies
+        durable pairs, which is what makes compacting committed deltas
+        replay-safe. Returns False for a replayed epoch."""
+        pairs_done = self._done(epoch_id, "pairs_e")
+        delta_done = self._done(epoch_id)
+        if pairs_done and delta_done:
+            return False
+        delta_dir = self._delta_dir(epoch_id)
+        # derive ONCE: the staged delta is what both consumers (pair
+        # generation and the store chain) read, so the derivation's
+        # aggregation never runs twice
+        if not is_committed(delta_dir):
+            derive(self._unseen(batch_df, epoch_id)).write.mode(
+                "overwrite"
+            ).parquet(delta_dir)
+        new = self.spark.read.parquet(delta_dir)
+        if not pairs_done:
+            self._commit(
+                delta_pairs(
+                    new, self.read_store(epoch_id), keys, count_col, cap
+                ),
+                self._log_dir("pairs_e", epoch_id),
+            )
+        if not delta_done:
+            self._mark(delta_dir)
+        return True

@@ -38,16 +38,11 @@ ids table prunes it at 100 TB); at-most-once pipelines pass
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_engineering_project_spotify_app_spark.streaming.delta_chain import (
     DeltaChainStore,
-)
-from data_engineering_project_spotify_app_spark.streaming.sinks import (
-    resolve_checkpoint,
 )
 
 
@@ -59,46 +54,19 @@ class StreamingExactDedupSink(DeltaChainStore):
     strictly before it)."""
 
     DELTA_PREFIX = "exact_e"
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        out_dir: str,
-        dedupe_guard: bool = True,
-        auto_compact_every: int | None = None,
-    ) -> None:
-        self.spark = spark
-        self.out_dir = out_dir
-        self.dedupe_guard = dedupe_guard
-        self.auto_compact_every = auto_compact_every
-
-    def _ids_dir(self, epoch_id: int) -> str:
-        return os.path.join(self.out_dir, f"ids_e{epoch_id}")
+    # the guard only needs the SET of seen doc_ids: union-mergeable, so
+    # the ids logs fold (deduplicated) to the store's target
+    LOGS = {"ids_e": True}
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        delta_dir = self._delta_dir(epoch_id)
-        ids_dir = self._ids_dir(epoch_id)
-        base = self._base_epoch()
-        if self._committed(delta_dir) or (
-            base is not None and base >= epoch_id
-        ):
+        if self._done(epoch_id):
             return  # replayed epoch: delta durable (or folded)
         self._check_chain_v2()
-        batch = batch_df.dropDuplicates(["doc_id"])
+        batch = self._unseen(batch_df, epoch_id, log="ids_e")
         if self.dedupe_guard:
-            # folded ids base + per-epoch logs strictly before this epoch
-            # (compact() folds the logs, so the probe's file count stays
-            # bounded over a long-lived stream)
-            prior_ids = self.read_log("ids_e", before_epoch=epoch_id)
-            if prior_ids is not None:
-                already = prior_ids.select("doc_id").join(
-                    F.broadcast(batch.select("doc_id")), "doc_id", "leftsemi"
-                ).distinct()
-                batch = batch.join(
-                    F.broadcast(already), "doc_id", "left_anti"
-                )
-            batch.select("doc_id").write.mode("overwrite").parquet(ids_dir)
-            self._mark(ids_dir)
+            self._commit(
+                batch.select("doc_id"), self._log_dir("ids_e", epoch_id)
+            )
         # chars default to length(text) so plain (doc_id, text) streams
         # need no extra column; a pre-computed n_chars is used verbatim
         chars = (
@@ -120,8 +88,7 @@ class StreamingExactDedupSink(DeltaChainStore):
                 F.min_by("n_chars", "doc_id").alias("chars_kept"),
             )
         )
-        delta.write.mode("overwrite").parquet(delta_dir)
-        self._mark(delta_dir)
+        self._commit(delta, self._delta_dir(epoch_id))
         self.maybe_compact()
 
     _V2_COLS = ("chars_all", "chars_kept")
@@ -154,11 +121,11 @@ class StreamingExactDedupSink(DeltaChainStore):
                 )
         self._chain_checked = True
 
-    def read_store(self) -> DataFrame | None:
+    def read_store(self, before_epoch: int | None = None) -> DataFrame | None:
         # per-dir check first: catches MIXED chains that per-column
         # inspection of the merged frame would miss (see _check_chain_v2)
         self._check_chain_v2()
-        store = super().read_store()
+        store = super().read_store(before_epoch)
         if store is not None and not all(
             c in store.columns for c in self._V2_COLS
         ):
@@ -214,74 +181,8 @@ class StreamingExactDedupSink(DeltaChainStore):
             ),
         )
 
-    def compact(self) -> list[int]:
-        """Fold committed deltas into a PRE-MERGED base (the mergeable
-        aggregates make the merged form equivalent for every reader),
-        so the at-rest state is O(distinct hashes), then run the
-        inherited sweep for the delta/base debris. The ids guard logs
-        are folded to the same target (the guard only needs the SET of
-        seen doc_ids, which is union-mergeable), so the per-epoch probe
-        stays a bounded file count instead of one tiny dir per epoch."""
-        deltas = self.committed_delta_epochs()
-        if not deltas:
-            folded = super().compact()  # debris sweep only
-            base = self._base_epoch()
-            if self.dedupe_guard and base is not None:
-                self.fold_log(
-                    "ids_e",
-                    base,
-                    transform=lambda df: df.select("doc_id").distinct(),
-                )
-            return folded
-        target = max(deltas)
-        merged = self.current_state()
-        merged.write.mode("overwrite").parquet(self._base_dir(target))
-        self._mark(self._base_dir(target))
-        import shutil
-
-        for v in self._all_ids(self.DELTA_PREFIX):
-            if v <= target:
-                shutil.rmtree(self._delta_dir(v), ignore_errors=True)
-        for b in self._all_ids(self.BASE_PREFIX):
-            if b != target:
-                shutil.rmtree(self._base_dir(b), ignore_errors=True)
-        if self.dedupe_guard:
-            # every epoch <= target has a committed (now folded) delta,
-            # so a replay of one returns at the base check and never
-            # probes the folded ids
-            self.fold_log(
-                "ids_e",
-                target,
-                transform=lambda df: df.select("doc_id").distinct(),
-            )
-        return deltas
-
-
-def maintain_exact_dedup(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    out_dir: str,
-    name: str,
-    checkpoint_dir: str | None = None,
-    dedupe_guard: bool = True,
-    auto_compact_every: int | None = None,
-):
-    """Attach the exact-dedup maintainer to a document stream; returns
-    (query, sink) so callers read ``sink.current_state()``.
-    checkpointLocation is always set — see maintain_lsh_store."""
-    sink = StreamingExactDedupSink(
-        spark,
-        out_dir,
-        dedupe_guard=dedupe_guard,
-        auto_compact_every=auto_compact_every,
-    )
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(name)
-        .option(
-            "checkpointLocation", resolve_checkpoint(out_dir, checkpoint_dir)
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    return q, sink
+    def _compacted(self) -> DataFrame:
+        """compact() folds committed deltas into a PRE-MERGED base (the
+        mergeable aggregates make the merged form equivalent for every
+        reader), so the at-rest state is O(distinct hashes)."""
+        return self.current_state()

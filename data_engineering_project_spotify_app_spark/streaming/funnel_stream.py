@@ -58,9 +58,6 @@ from data_engineering_project_spotify_app_spark.streaming.exact_stream import (
 from data_engineering_project_spotify_app_spark.streaming.landing_stream import (
     StreamingDocLandingSink,
 )
-from data_engineering_project_spotify_app_spark.streaming.sinks import (
-    resolve_checkpoint,
-)
 
 
 def _doc_stats(batch: DataFrame) -> DataFrame:
@@ -194,29 +191,3 @@ class StreamingCurationFunnel:
             )
         )
 
-
-def maintain_curation_funnel(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    out_dir: str,
-    name: str,
-    bucket_cap: int | None = None,
-    checkpoint_dir: str | None = None,
-    dedupe_guard: bool = True,
-):
-    """Attach the funnel maintainer to a document stream; returns
-    (query, funnel) so callers read ``funnel.report()``.
-    checkpointLocation is always set — see maintain_lsh_store."""
-    funnel = StreamingCurationFunnel(
-        spark, out_dir, bucket_cap=bucket_cap, dedupe_guard=dedupe_guard
-    )
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(name)
-        .option(
-            "checkpointLocation", resolve_checkpoint(out_dir, checkpoint_dir)
-        )
-        .foreachBatch(funnel)
-        .start()
-    )
-    return q, funnel

@@ -8,8 +8,8 @@ delta-chain machinery that solves exactly this for the IVF index and
 dedup stores (streaming/delta_chain.py) sat unused for landings.
 
 This module closes that gap with two foreachBatch maintainers on the
-same append-only delta-chain + commit-marker contract as the four
-existing store maintainers:
+same append-only delta-chain + commit-marker contract as the other
+store maintainers:
 
 - ``StreamingDocLandingSink``: any PER-DOCUMENT pure-map landing
   (minhash signatures, simhash fingerprints, word bigrams — the
@@ -50,7 +50,6 @@ rebuild ran per corpus change, now decoupled from ingest frequency.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,9 +66,6 @@ from data_engineering_project_spotify_app_spark.sources.bucketed import (
 from data_engineering_project_spotify_app_spark.streaming.delta_chain import (
     DeltaChainStore,
 )
-from data_engineering_project_spotify_app_spark.streaming.sinks import (
-    resolve_checkpoint,
-)
 
 
 class StreamingDocLandingSink(DeltaChainStore):
@@ -81,6 +77,7 @@ class StreamingDocLandingSink(DeltaChainStore):
     implies its ids are durable (guard soundness across retries)."""
 
     DELTA_PREFIX = "rows_e"
+    LOGS = {"ids_e": True}
 
     def __init__(
         self,
@@ -98,35 +95,19 @@ class StreamingDocLandingSink(DeltaChainStore):
         cadence with no operator intervention. Publish rewrites the
         bucketed table — O(store) — which is why it rides the
         compaction trigger rather than every epoch."""
-        self.spark = spark
-        self.out_dir = out_dir
+        super().__init__(spark, out_dir, dedupe_guard, auto_compact_every)
         self.transform = transform
-        self.dedupe_guard = dedupe_guard
-        self.auto_compact_every = auto_compact_every
         self.publish_to = publish_to
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        delta_dir = self._delta_dir(epoch_id)
-        base = self._base_epoch()
-        if self._committed(delta_dir) or (
-            base is not None and base >= epoch_id
-        ):
+        if self._done(epoch_id):
             return  # replayed epoch: delta durable (or folded)
-        batch = batch_df.dropDuplicates(["doc_id"])
+        batch = self._unseen(batch_df, epoch_id, log="ids_e")
         if self.dedupe_guard:
-            prior = self.read_log("ids_e", before_epoch=epoch_id)
-            if prior is not None:
-                already = prior.select("doc_id").join(
-                    F.broadcast(batch.select("doc_id")), "doc_id", "leftsemi"
-                ).distinct()
-                batch = batch.join(
-                    F.broadcast(already), "doc_id", "left_anti"
-                )
-            ids_dir = self._log_dir("ids_e", epoch_id)
-            batch.select("doc_id").write.mode("overwrite").parquet(ids_dir)
-            self._mark(ids_dir)
-        self.transform(batch).write.mode("overwrite").parquet(delta_dir)
-        self._mark(delta_dir)
+            self._commit(
+                batch.select("doc_id"), self._log_dir("ids_e", epoch_id)
+            )
+        self._commit(self.transform(batch), self._delta_dir(epoch_id))
         if self.maybe_compact() and self.publish_to is not None:
             sf_dir, prefix, n_buckets = self.publish_to
             self.publish(sf_dir, prefix, n_buckets)
@@ -135,17 +116,6 @@ class StreamingDocLandingSink(DeltaChainStore):
         """The landing as of now: plain union of the delta chain (each
         doc contributed exactly once — the guard's job)."""
         return self.read_store()
-
-    def compact(self) -> list[int]:
-        folded = super().compact()
-        base = self._base_epoch()
-        if self.dedupe_guard and base is not None:
-            self.fold_log(
-                "ids_e",
-                base,
-                transform=lambda df: df.select("doc_id").distinct(),
-            )
-        return folded
 
     def publish(
         self,
@@ -181,6 +151,10 @@ class StreamingBasketLandingSink(DeltaChainStore):
     order: order-ids guard log, edges log, baskets delta."""
 
     DELTA_PREFIX = "baskets_e"
+    # both set-valued: re-seen order keys, and edges two epochs' orders
+    # can both generate — each folds to its distinct rows, so the
+    # at-rest edge state is O(distinct edges)
+    LOGS = {"ords_e": True, "edges_e": True}
 
     def __init__(
         self,
@@ -199,10 +173,7 @@ class StreamingBasketLandingSink(DeltaChainStore):
         no operator intervention. Bucket counts use publish()'s
         defaults: corpus_buckets(spark, sf_dir), the count the batch
         landings of the same corpus get."""
-        self.spark = spark
-        self.out_dir = out_dir
-        self.dedupe_guard = dedupe_guard
-        self.auto_compact_every = auto_compact_every
+        super().__init__(spark, out_dir, dedupe_guard, auto_compact_every)
         self.strict_whole_orders = strict_whole_orders
         self.publish_to = publish_to
 
@@ -211,57 +182,39 @@ class StreamingBasketLandingSink(DeltaChainStore):
             basket_edges,
         )
 
-        delta_dir = self._delta_dir(epoch_id)
-        base = self._base_epoch()
-        if self._committed(delta_dir) or (
-            base is not None and base >= epoch_id
-        ):
+        if self._done(epoch_id):
             # replayed epoch: reclaim a staged dir stranded by a crash
-            # between the delta marker and the success-path rmtree
-            # (same crash-debris handling as linedup_stream's replay)
-            import shutil
-
-            shutil.rmtree(
-                os.path.join(self.out_dir, f"staged_e{epoch_id}"),
-                ignore_errors=True,
-            )
+            # between the delta marker and the success-path _unstage
+            self._unstage(epoch_id)
             return
-        batch = batch_df.dropDuplicates(["l_orderkey", "l_partkey"])
-        if self.dedupe_guard:
-            prior = self.read_log("ords_e", before_epoch=epoch_id)
-            if prior is not None:
-                already = prior.select("l_orderkey").join(
-                    F.broadcast(batch.select("l_orderkey").distinct()),
-                    "l_orderkey",
-                    "leftsemi",
-                ).distinct()
-                if self.strict_whole_orders:
-                    self._check_redelivery_is_identical(batch, already)
-                batch = batch.join(
-                    F.broadcast(already), "l_orderkey", "left_anti"
-                )
-            ids_dir = self._log_dir("ords_e", epoch_id)
-            batch.select("l_orderkey").distinct().write.mode(
-                "overwrite"
-            ).parquet(ids_dir)
-            self._mark(ids_dir)
-        # One derivation per epoch, two consumers (baskets delta + edge
-        # log) — stage the baskets like linedup stages its chunked
-        # lines, so the groupBy runs once.
-        staged = os.path.join(self.out_dir, f"staged_e{epoch_id}")
-        baskets = batch.groupBy("l_orderkey").agg(
-            F.array_distinct(F.collect_list("l_partkey")).alias("ps")
+        batch = self._unseen(
+            batch_df,
+            epoch_id,
+            key="l_orderkey",
+            log="ords_e",
+            rows=["l_orderkey", "l_partkey"],
+            on_seen=(
+                self._check_redelivery_is_identical
+                if self.strict_whole_orders
+                else None
+            ),
         )
-        baskets.write.mode("overwrite").parquet(staged)
-        baskets = self.spark.read.parquet(staged)
-        edges_dir = self._log_dir("edges_e", epoch_id)
-        basket_edges(baskets).write.mode("overwrite").parquet(edges_dir)
-        self._mark(edges_dir)
-        baskets.write.mode("overwrite").parquet(delta_dir)
-        self._mark(delta_dir)
-        import shutil
-
-        shutil.rmtree(staged, ignore_errors=True)
+        if self.dedupe_guard:
+            self._commit(
+                batch.select("l_orderkey").distinct(),
+                self._log_dir("ords_e", epoch_id),
+            )
+        # One derivation per epoch, two consumers (baskets delta + edge
+        # log) — staged so the groupBy runs once.
+        baskets = self._stage(
+            batch.groupBy("l_orderkey").agg(
+                F.array_distinct(F.collect_list("l_partkey")).alias("ps")
+            ),
+            epoch_id,
+        )
+        self._commit(basket_edges(baskets), self._log_dir("edges_e", epoch_id))
+        self._commit(baskets, self._delta_dir(epoch_id))
+        self._unstage(epoch_id)
         if self.maybe_compact() and self.publish_to is not None:
             self.publish(self.publish_to)
 
@@ -320,23 +273,6 @@ class StreamingBasketLandingSink(DeltaChainStore):
         log = self.read_log("edges_e")
         return None if log is None else log.distinct()
 
-    def compact(self) -> list[int]:
-        folded = super().compact()
-        base = self._base_epoch()
-        if base is not None:
-            if self.dedupe_guard:
-                self.fold_log(
-                    "ords_e",
-                    base,
-                    transform=lambda df: df.select("l_orderkey").distinct(),
-                )
-            # pre-dedup the folded edge base so the at-rest state is
-            # O(distinct edges), not O(sum of epoch pair counts)
-            self.fold_log(
-                "edges_e", base, transform=lambda df: df.distinct()
-            )
-        return folded
-
     def publish(
         self,
         sf_dir: str,
@@ -376,68 +312,3 @@ class StreamingBasketLandingSink(DeltaChainStore):
             seed_landing(self.spark, sf_dir, "copurchase_edges", ename)
         return bname, ename
 
-
-def maintain_doc_landing(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    out_dir: str,
-    name: str,
-    transform: Callable[[DataFrame], DataFrame],
-    checkpoint_dir: str | None = None,
-    dedupe_guard: bool = True,
-    auto_compact_every: int | None = None,
-):
-    """Attach a per-document landing maintainer to a document stream;
-    returns (query, sink). checkpointLocation is always set — durable
-    monotone epoch ids are what make the marker contract exactly-once
-    (see delta_chain.py)."""
-    sink = StreamingDocLandingSink(
-        spark,
-        out_dir,
-        transform,
-        dedupe_guard=dedupe_guard,
-        auto_compact_every=auto_compact_every,
-    )
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(name)
-        .option(
-            "checkpointLocation", resolve_checkpoint(out_dir, checkpoint_dir)
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    return q, sink
-
-
-def maintain_basket_landing(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    out_dir: str,
-    name: str,
-    checkpoint_dir: str | None = None,
-    dedupe_guard: bool = True,
-    auto_compact_every: int | None = None,
-    publish_to: str | None = None,
-):
-    """Attach the basket+edge landing maintainer to a lineitem-shaped
-    stream; returns (query, sink). ``publish_to=sf_dir`` (with
-    ``auto_compact_every``) auto-publishes both landings at compaction
-    cadence."""
-    sink = StreamingBasketLandingSink(
-        spark,
-        out_dir,
-        dedupe_guard=dedupe_guard,
-        auto_compact_every=auto_compact_every,
-        publish_to=publish_to,
-    )
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(name)
-        .option(
-            "checkpointLocation", resolve_checkpoint(out_dir, checkpoint_dir)
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    return q, sink

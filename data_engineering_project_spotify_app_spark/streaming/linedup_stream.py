@@ -24,9 +24,6 @@ compaction job.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,9 +33,6 @@ from data_engineering_project_spotify_app_spark.operators.linedup import (
 )
 from data_engineering_project_spotify_app_spark.streaming.delta_chain import (
     DeltaChainStore,
-)
-from data_engineering_project_spotify_app_spark.streaming.sinks import (
-    resolve_checkpoint,
 )
 
 
@@ -50,6 +44,9 @@ class StreamingLineDedupSink(DeltaChainStore):
     (what makes compacting committed deltas replay-safe)."""
 
     DELTA_PREFIX = "digests_e"
+    # clean_docs() is a plain union, so one folded docs base preserves
+    # every reader's view while bounding the guard probe's file count
+    LOGS = {"docs_e": False}
 
     def __init__(
         self,
@@ -59,14 +56,8 @@ class StreamingLineDedupSink(DeltaChainStore):
         dedupe_guard: bool = True,
         auto_compact_every: int | None = None,
     ) -> None:
-        self.spark = spark
-        self.out_dir = out_dir
+        super().__init__(spark, out_dir, dedupe_guard, auto_compact_every)
         self.k = k
-        self.dedupe_guard = dedupe_guard
-        self.auto_compact_every = auto_compact_every
-
-    def _docs_dir(self, epoch_id: int) -> str:
-        return os.path.join(self.out_dir, f"docs_e{epoch_id}")
 
     def current_store(self) -> DataFrame | None:
         return self.read_store()
@@ -78,63 +69,27 @@ class StreamingLineDedupSink(DeltaChainStore):
         return self.read_log("docs_e")
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        docs_dir = self._docs_dir(epoch_id)
-        delta_dir = self._delta_dir(epoch_id)
-        staged = os.path.join(self.out_dir, f"staged_e{epoch_id}")
-        base = self._base_epoch()
-        delta_done = self._committed(delta_dir) or (
-            base is not None and base >= epoch_id
-        )
-        docs_base = self._log_base_epoch("docs_e")
-        docs_done = self._committed(docs_dir) or (
-            docs_base is not None and docs_base >= epoch_id
-        )
+        delta_done = self._done(epoch_id)
+        docs_done = self._done(epoch_id, "docs_e")
         if docs_done and delta_done:
             # Replayed epoch: both outputs durable. A crash between the
-            # second marker and the staged-dir rmtree below leaves the
-            # staged parquet behind, and compact() only sweeps delta/
-            # base dirs — reclaim it here or it leaks permanently.
-            if os.path.isdir(staged):
-                shutil.rmtree(staged, ignore_errors=True)
+            # second marker and the _unstage below leaves the staged
+            # parquet behind — reclaim it here.
+            self._unstage(epoch_id)
             return
-        store_paths = self._store_paths(before_epoch=epoch_id)
-        store = (
-            self.spark.read.parquet(*store_paths) if store_paths else None
-        )
-        # within-batch dedup + cross-epoch duplicate guard (mirror of
-        # the LSH/ANN sinks'): a doc_id re-delivered by a backfill would
-        # re-log the document into a second docs_e log (clean_docs()
-        # would return it twice, with all its lines dropped as "already
-        # kept"). The digest store has no doc ids, so the guard probes
-        # the committed docs logs' doc_id column. COST MODEL, stated
-        # honestly: a single-column (column-pruned) read of every
-        # committed docs log per epoch — O(docs logged) per epoch on
-        # this format-free layout; at 100 TB the docs log is a table
-        # bucketed by doc_id where the broadcast semi probe prunes to
-        # matching buckets. At-most-once ingest pipelines can construct
-        # the sink with dedupe_guard=False and skip the probe.
-        batch = batch_df.dropDuplicates(["doc_id"])
-        prior = (
-            self.read_log("docs_e", before_epoch=epoch_id)
-            if self.dedupe_guard
-            else None
-        )
-        if prior is not None:
-            prior_ids = prior.select("doc_id")
-            already = (
-                prior_ids.join(
-                    F.broadcast(batch.select("doc_id")), "doc_id", "leftsemi"
-                ).distinct()
-            )
-            batch = batch.join(F.broadcast(already), "doc_id", "left_anti")
+        store = self.read_store(epoch_id)
+        # the guard probes the committed docs logs' doc_id column (the
+        # digest store has no doc ids): a re-delivered doc_id would be
+        # re-logged into a second docs_e log, and clean_docs() would
+        # return it twice with all its lines dropped as "already kept"
+        batch = self._unseen(batch_df, epoch_id, log="docs_e")
         # Chunk ONCE per epoch; both consumers (the cleaned-doc log and
         # the store append) read the staged materialization, the same
-        # diamond-avoidance trade as dedup_stream's staged bands.
-        lines = _chunk_lines(batch, self.k).withColumn(
-            "h", F.md5("line")
+        # diamond-avoidance trade as the pair-log sinks' staged delta.
+        lines = self._stage(
+            _chunk_lines(batch, self.k).withColumn("h", F.md5("line")),
+            epoch_id,
         )
-        lines.write.mode("overwrite").parquet(staged)
-        lines = self.spark.read.parquet(staged)
         # batch-local first occurrence: the same min-struct HASH
         # AGGREGATE as batch dedup_lines (never a window over the
         # digest — the mega-duplicated boilerplate line argument)
@@ -175,66 +130,13 @@ class StreamingLineDedupSink(DeltaChainStore):
                 F.count(F.when(F.col("keep"), 1)).alias("n_kept"),
                 F.count(F.when(~F.col("keep"), 1)).alias("n_dropped"),
             )
-            cleaned.write.mode("overwrite").parquet(docs_dir)
-            self._mark(docs_dir)
+            self._commit(cleaned, self._log_dir("docs_e", epoch_id))
         if not delta_done:
             # DELTA write: only this epoch's newly-kept digests —
             # O(|delta|), never a rewrite of the whole digest store
-            flagged.filter("keep").select("h").distinct().write.mode(
-                "overwrite"
-            ).parquet(delta_dir)
-            self._mark(delta_dir)
-        if os.path.isdir(staged):
-            shutil.rmtree(staged, ignore_errors=True)
+            self._commit(
+                flagged.filter("keep").select("h").distinct(),
+                self._delta_dir(epoch_id),
+            )
+        self._unstage(epoch_id)
         self.maybe_compact()
-
-    def compact(self) -> list[int]:
-        """Fold the digest-store chain (inherited), then fold the docs
-        OUTPUT logs to the same target: clean_docs() is a plain union,
-        so one folded docs base preserves every reader's view while
-        bounding the per-epoch guard probe's file count (the docs_e
-        twin of exact_stream's ids fold). Every docs log <= the target
-        belongs to an epoch whose digest delta committed (marker order:
-        docs first), so a replay of one returns at the base checks and
-        never re-logs into the folded range."""
-        folded = super().compact()
-        target = self._base_epoch()
-        if target is not None:
-            self.fold_log("docs_e", target)
-        return folded
-
-
-def maintain_line_dedup(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    out_dir: str,
-    name: str,
-    k: int = LINE_TOKENS,
-    checkpoint_dir: str | None = None,
-    dedupe_guard: bool = True,
-    auto_compact_every: int | None = None,
-):
-    """Attach the streaming line-dedup maintainer to a document stream;
-    returns (query, sink) so callers read ``sink.clean_docs()``.
-
-    checkpointLocation is always set (default ``out_dir/_checkpoint``)
-    — see maintain_lsh_store: without durable monotone epoch ids a
-    restarted query lands new files on already-marked epochs and
-    silently drops them."""
-    sink = StreamingLineDedupSink(
-        spark,
-        out_dir,
-        k=k,
-        dedupe_guard=dedupe_guard,
-        auto_compact_every=auto_compact_every,
-    )
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(name)
-        .option(
-            "checkpointLocation", resolve_checkpoint(out_dir, checkpoint_dir)
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    return q, sink

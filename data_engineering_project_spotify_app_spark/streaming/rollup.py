@@ -10,7 +10,7 @@ the same path. Readers always see the latest committed snapshot.
 
 At 100 TB the snapshot is a transactional-format table and the version
 chain is its commit log; this directory form is the format-free
-equivalent (same trade as sinks.py's EpochJsonSink) and keeps the
+equivalent (same trade as sinks.py's EpochSink) and keeps the
 contract testable here. State size is O(#groups), so "rewrite the whole
 state per epoch" is the cheap operation — it is the EVENT history that
 must never be rescanned, and is not.
@@ -22,12 +22,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_engineering_project_spotify_app_spark.streaming.sinks import (
-    resolve_checkpoint,
-)
 from data_engineering_project_spotify_app_spark.operators.incremental import (
     _partials,
     merge_partials,
+)
+from data_engineering_project_spotify_app_spark.streaming.sinks import (
+    is_committed,
+    listed_ids,
+    mark_committed,
 )
 
 
@@ -42,15 +44,7 @@ class IncrementalRollupSink:
         return os.path.join(self.out_dir, f"state_v{epoch_id}")
 
     def committed_versions(self) -> list[int]:
-        if not os.path.isdir(self.out_dir):
-            return []
-        out = []
-        for name in os.listdir(self.out_dir):
-            if name.startswith("state_v") and os.path.exists(
-                os.path.join(self.out_dir, name, "_COMMITTED")
-            ):
-                out.append(int(name[len("state_v"):]))
-        return sorted(out)
+        return listed_ids(self.out_dir, "state_v")
 
     def current(self) -> DataFrame | None:
         versions = self.committed_versions()
@@ -60,7 +54,7 @@ class IncrementalRollupSink:
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         target = self._dir(epoch_id)
-        if os.path.exists(os.path.join(target, "_COMMITTED")):
+        if is_committed(target):
             return  # replayed epoch: snapshot already durable
         delta = _partials(batch_df)
         prior = [v for v in self.committed_versions() if v < epoch_id]
@@ -73,33 +67,5 @@ class IncrementalRollupSink:
         # The state is #groups rows — collapse to one file so the
         # snapshot read is a single-footer open at any scale of history.
         state.coalesce(1).write.mode("overwrite").parquet(target)
-        with open(os.path.join(target, "_COMMITTED"), "w") as fh:
-            fh.write("ok\n")
+        mark_committed(target)
 
-
-def maintain_rollup(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    out_dir: str,
-    name: str,
-    checkpoint_dir: str | None = None,
-):
-    """Attach the rollup maintainer to an event stream; returns
-    (query, sink) so callers can read ``sink.current()``.
-
-    checkpointLocation is always set (default ``out_dir/_checkpoint``):
-    the epoch-keyed snapshot chain needs durable monotone epoch ids — a
-    checkpoint-less restart re-lists the source with epoch ids reset to
-    0, so new files land on epochs whose snapshots already exist and
-    are skipped as replays (silent data loss)."""
-    sink = IncrementalRollupSink(spark, out_dir)
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(name)
-        .option(
-            "checkpointLocation", resolve_checkpoint(out_dir, checkpoint_dir)
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    return q, sink

@@ -165,18 +165,11 @@ def run_to_memory_sink(
         q.stop()
 
 
-def clicks_to_purchases_join(
-    events: DataFrame,
-    attribution_window: str = "30 minutes",
-    watermark: str = "1 hour",
+def _clicks_to_purchases(
+    events: DataFrame, attribution_window: str, watermark: str, how: str
 ) -> DataFrame:
-    """Stream-stream inner join: purchases attributed to a prior click.
-
-    The canonical attribution join — each purchase matches clicks by the
-    same user within the preceding attribution window. Both sides are
-    watermarked so the join state is bounded: click state can be evicted
-    once no purchase within the window can still arrive.
-    """
+    """Purchases joined (``how``) to the same user's clicks within the
+    preceding ``attribution_window``, both sides watermarked."""
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -205,8 +198,23 @@ def clicks_to_purchases_join(
             AND click_ts >= purchase_ts - INTERVAL {attribution_window}
             """
         ),
-        "inner",
+        how,
     ).select("purchase_id", "click_id", "p_user", "purchase_ts", "amount")
+
+
+def clicks_to_purchases_join(
+    events: DataFrame,
+    attribution_window: str = "30 minutes",
+    watermark: str = "1 hour",
+) -> DataFrame:
+    """Stream-stream inner join: purchases attributed to a prior click.
+
+    The canonical attribution join — each purchase matches clicks by the
+    same user within the preceding attribution window. Both sides are
+    watermarked so the join state is bounded: click state can be evicted
+    once no purchase within the window can still arrive.
+    """
+    return _clicks_to_purchases(events, attribution_window, watermark, "inner")
 
 
 def clicks_to_purchases_left_outer(
@@ -226,36 +234,9 @@ def clicks_to_purchases_left_outer(
     stream joins at scale). Both sides must be watermarked and the join
     condition time-bounded or Spark rejects the outer join outright.
     """
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
+    return _clicks_to_purchases(
+        events, attribution_window, watermark, "leftOuter"
     )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("amount"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return purchases.join(
-        clicks,
-        F.expr(
-            f"""
-            p_user = c_user
-            AND click_ts <= purchase_ts
-            AND click_ts >= purchase_ts - INTERVAL {attribution_window}
-            """
-        ),
-        "leftOuter",
-    ).select("purchase_id", "click_id", "p_user", "purchase_ts", "amount")
 
 
 def interval_join_stream(
@@ -506,10 +487,11 @@ def burst_detect_refit(
          compaction of the partials is sources.ingest.compact_entity's
          verified-swap job.
 
-    Returns the DataStreamWriter with a checkpointLocation already set
-    (``store_dir/_checkpoint``; caller may override with another
-    .option before .start()) — durable monotone epoch ids are what make
-    the per-epoch overwrite slices replay-correct across restarts.
+    Returns the DataStreamWriter, un-started, with a checkpointLocation
+    already set (``store_dir/_checkpoint``; caller may override with
+    another .option before .start()) — durable monotone epoch ids are
+    what make the per-epoch overwrite slices replay-correct across
+    restarts (see sinks.attach).
     Scale: each batch reduces to O(types × days) tuples before anything
     is written; the baseline frame is O(types) and broadcast into the
     score join.
@@ -517,10 +499,6 @@ def burst_detect_refit(
     import os
 
     from pyspark.sql import functions as SF
-
-    from data_engineering_project_spotify_app_spark.streaming.sinks import (
-        resolve_checkpoint,
-    )
 
     counts_path = os.path.join(store_dir, "daycounts")
     flags_path = os.path.join(store_dir, "flags")
@@ -592,7 +570,7 @@ def burst_detect_refit(
 
     return (
         events.writeStream.option(
-            "checkpointLocation", resolve_checkpoint(store_dir)
+            "checkpointLocation", os.path.join(store_dir, "_checkpoint")
         )
         .foreachBatch(process)
         .outputMode("update")

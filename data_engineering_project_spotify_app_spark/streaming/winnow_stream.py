@@ -23,10 +23,11 @@ producing pairs from N on, but its earlier pairs stay in the log
 (emitted pairs are facts; the batch form judges final df instead).
 
 Commit-marker contract, marker order, guard, and compaction are the
-LSH sink's exactly: pairs log marked FIRST, then the store delta; the
-cross-epoch duplicate guard probes the store's doc_id column with a
-broadcast semi-join; compact() folds the store chain and the pairs
-logs (each doc/pair lands once, so both folds are plain unions).
+LSH sink's exactly — both run delta_chain.PairLogStore's epoch: pairs
+log marked FIRST, then the store delta; the cross-epoch duplicate
+guard probes the store's doc_id column with a broadcast semi-join;
+compact() folds the store chain and the pairs logs (each doc/pair
+lands once, so both folds are plain unions).
 
 Reference parity: the reference app has no streaming surface at all
 (app.py's whole pipeline is request-driven batch); this module is part
@@ -44,11 +45,7 @@ from data_engineering_project_spotify_app_spark.operators.dedup import (
     winnow_fingerprints_df,
 )
 from data_engineering_project_spotify_app_spark.streaming.delta_chain import (
-    DeltaChainStore,
-    delta_pairs,
-)
-from data_engineering_project_spotify_app_spark.streaming.sinks import (
-    resolve_checkpoint,
+    PairLogStore,
 )
 
 
@@ -73,7 +70,7 @@ class PartialStoreError(ValueError):
 _EXPECTED_IDS_CACHE: dict[tuple[str, str, object, str], DataFrame] = {}
 
 
-class StreamingWinnowSink(DeltaChainStore):
+class StreamingWinnowSink(PairLogStore):
     """foreachBatch maintainer of the winnowing fingerprint store +
     shared-pair log. Marker order inside an epoch: pairs FIRST, then
     the fingerprint delta — a committed delta implies durable pairs,
@@ -111,17 +108,11 @@ class StreamingWinnowSink(DeltaChainStore):
         sink must pass ``winnow_word_fingerprints`` so it supersedes
         the WORD landing (q_winnowing_pairs_word) and never poisons the
         char one with word fingerprints."""
-        self.spark = spark
-        self.out_dir = out_dir
+        super().__init__(spark, out_dir, dedupe_guard, auto_compact_every)
         self.df_cap = df_cap
-        self.dedupe_guard = dedupe_guard
-        self.auto_compact_every = auto_compact_every
         self.publish_to = publish_to
         self.fingerprints_fn = fingerprints_fn or winnow_fingerprints_df
         self.landing_prefix = landing_prefix
-
-    def _pairs_dir(self, epoch_id: int) -> str:
-        return os.path.join(self.out_dir, f"pairs_e{epoch_id}")
 
     def _expected_doc_ids(self, sf_dir: str) -> DataFrame:
         """Distinct doc_ids of the corpus docs that produce ≥1
@@ -167,19 +158,6 @@ class StreamingWinnowSink(DeltaChainStore):
 
     def current_fingerprints(self) -> DataFrame | None:
         return self.read_store()
-
-    def pairs(self) -> DataFrame | None:
-        """The shared-pair log (folded base + newer epochs) — the
-        streamed equivalent of the batch winnowing pair set. Every pair
-        lands in exactly one epoch, so the fold is a plain union."""
-        return self.read_log("pairs_e")
-
-    def compact(self) -> list[int]:
-        folded = super().compact()
-        target = self._base_epoch()
-        if target is not None:
-            self.fold_log("pairs_e", target)
-        return folded
 
     def publish(
         self,
@@ -269,63 +247,15 @@ class StreamingWinnowSink(DeltaChainStore):
         return name
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        pairs_dir = self._pairs_dir(epoch_id)
-        delta_dir = self._delta_dir(epoch_id)
-        base = self._base_epoch()
-        delta_done = self._committed(delta_dir) or (
-            base is not None and base >= epoch_id
-        )
-        pairs_base = self._log_base_epoch("pairs_e")
-        pairs_done = self._committed(pairs_dir) or (
-            pairs_base is not None and pairs_base >= epoch_id
-        )
-        if pairs_done and delta_done:
-            return  # replayed epoch: both outputs durable (or folded)
-        if self._committed(delta_dir):
-            fp_new = self.spark.read.parquet(delta_dir)
-        else:
-            # within-batch dedup + cross-epoch duplicate guard: a
-            # re-delivered doc_id must not append a second fingerprint
-            # set (it would re-emit its pairs and inflate n_shared —
-            # same contract and cost model as the LSH sink's guard: a
-            # column-pruned doc_id probe of the store per epoch;
-            # at-most-once pipelines pass dedupe_guard=False)
-            docs = batch_df.dropDuplicates(["doc_id"])
-            guard_paths = (
-                self._store_paths(before_epoch=epoch_id)
-                if self.dedupe_guard
-                else []
-            )
-            if guard_paths:
-                store_ids = self.spark.read.parquet(*guard_paths)
-                already = (
-                    store_ids.select("doc_id")
-                    .join(
-                        F.broadcast(docs.select("doc_id")),
-                        "doc_id",
-                        "leftsemi",
-                    )
-                    .distinct()
-                )
-                docs = docs.join(
-                    F.broadcast(already), "doc_id", "left_anti"
-                )
-            fp_new = self.fingerprints_fn(docs)
-            fp_new.write.mode("overwrite").parquet(delta_dir)
-            fp_new = self.spark.read.parquet(delta_dir)
-        if not pairs_done:
-            store_paths = self._store_paths(before_epoch=epoch_id)
-            store = (
-                self.spark.read.parquet(*store_paths)
-                if store_paths
-                else None
-            )
-            delta_pairs(
-                fp_new, store, ["fp"], "n_shared", self.df_cap
-            ).write.mode("overwrite").parquet(pairs_dir)
-            self._mark(pairs_dir)
-        if not delta_done:
-            self._mark(delta_dir)
+        if not self._pair_epoch(
+            batch_df,
+            epoch_id,
+            self.fingerprints_fn,
+            ["fp"],
+            "n_shared",
+            self.df_cap,
+        ):
+            return
         if self.maybe_compact() and self.publish_to is not None:
             # Auto-publish rides the completeness guard: a mid-stream
             # compaction whose store is still a prefix of the corpus
@@ -348,38 +278,3 @@ class StreamingWinnowSink(DeltaChainStore):
                     e,
                 )
 
-
-def maintain_winnow_store(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    out_dir: str,
-    name: str,
-    df_cap: int | None = None,
-    checkpoint_dir: str | None = None,
-    dedupe_guard: bool = True,
-    auto_compact_every: int | None = None,
-    publish_to: str | None = None,
-):
-    """Attach the winnowing maintainer to a document stream; returns
-    (query, sink) so callers read ``sink.pairs()`` /
-    ``sink.current_fingerprints()``. checkpointLocation is always set —
-    durable monotone epoch ids are the marker contract's substrate
-    (see maintain_lsh_store)."""
-    sink = StreamingWinnowSink(
-        spark,
-        out_dir,
-        df_cap=df_cap,
-        dedupe_guard=dedupe_guard,
-        auto_compact_every=auto_compact_every,
-        publish_to=publish_to,
-    )
-    q = (
-        stream_df.writeStream.outputMode("append")
-        .queryName(name)
-        .option(
-            "checkpointLocation", resolve_checkpoint(out_dir, checkpoint_dir)
-        )
-        .foreachBatch(sink)
-        .start()
-    )
-    return q, sink

@@ -8,7 +8,9 @@ Usage:
   python scripts/plan_audit.py [out_dir] [name ...]
 With no names: every registered query. Writes <out_dir>/<name>.txt and a
 summary JSON to <out_dir>/_audit.json. Plans are built lazily (no
-execution), so this is cheap; it does NOT time anything.
+execution), so this is cheap; it does NOT time anything. The session's
+warehouse path (per process by default, see session.py) is written as
+``<warehouse>``, so two audits of unchanged code save identical text.
 """
 
 from __future__ import annotations
@@ -69,6 +71,7 @@ def main() -> None:
     registry.load_all_modules()
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="plan_audit")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     todo = names or list(registry.QUERIES)
     summary: dict[str, dict] = {}
     for name in todo:
@@ -78,7 +81,7 @@ def main() -> None:
             # the whole audit with a KeyError (ADVICE r14)
             fn = registry.QUERIES[name]
             df = fn(spark, sf_dir)
-            text = plan_text(df)
+            text = plan_text(df).replace(warehouse, "<warehouse>")
         except Exception as exc:  # noqa: BLE001 — record and move on
             summary[name] = {"error": str(exc)[:200]}
             continue

@@ -26,8 +26,8 @@ from data_engineering_project_spotify_app_spark.streaming.dedup_stream import (
 from data_engineering_project_spotify_app_spark.streaming.landing_stream import (
     StreamingBasketLandingSink,
     StreamingDocLandingSink,
-    maintain_doc_landing,
 )
+from data_engineering_project_spotify_app_spark.streaming.sinks import attach
 
 from tests.oracle_harness import compare
 
@@ -83,6 +83,27 @@ def test_streamed_signature_landing_equals_batch_any_split(spark, tmp_path):
     extra = [(990001, "a brand new streamed landing document")]
     sink(spark.createDataFrame(extra, DOC_SCHEMA), 3)
     assert sink.current_landing().count() == len(want) + 1
+
+
+def test_doc_landing_duplicate_reingest_is_ignored(spark, tmp_path):
+    """A later epoch re-delivering only stored doc_ids, one of them
+    twice within the batch, adds no landing rows (the doc-landing twin
+    of test_lsh_duplicate_reingest_is_ignored)."""
+    docs = _docs(spark, n=60)
+    out = str(tmp_path / "sigs")
+    sink = StreamingDocLandingSink(spark, out, _sig_transform)
+    sink(spark.createDataFrame(docs[:40], DOC_SCHEMA), 0)
+    sink(spark.createDataFrame(docs[40:], DOC_SCHEMA), 1)
+    want = sorted(
+        tuple(r)
+        for r in minhash_signatures_df(
+            spark.createDataFrame(docs, DOC_SCHEMA)
+        ).collect()
+    )
+    assert sorted(tuple(r) for r in sink.current_landing().collect()) == want
+    sink(spark.createDataFrame(docs[10:50] + [docs[45]], DOC_SCHEMA), 2)
+    assert sink.committed_delta_epochs() == [0, 1, 2]
+    assert sorted(tuple(r) for r in sink.current_landing().collect()) == want
 
 
 def test_published_signature_landing_consumer_matches_oracle(
@@ -164,9 +185,8 @@ def test_doc_landing_restart_continues_epochs(spark, tmp_path):
     drop("b1.json", docs[30:60])
     out = str(tmp_path / "state")
     stream = stream_documents(spark, src, max_files_per_trigger=1)
-    q, sink = maintain_doc_landing(
-        spark, stream, out, "landing_restart1", _sig_transform
-    )
+    sink = StreamingDocLandingSink(spark, out, _sig_transform)
+    q = attach(stream, sink, "landing_restart1")
     try:
         q.processAllAvailable()
     finally:
@@ -175,9 +195,8 @@ def test_doc_landing_restart_continues_epochs(spark, tmp_path):
     drop("b2.json", docs[60:])
     time.sleep(0.05)
     stream2 = stream_documents(spark, src, max_files_per_trigger=1)
-    q2, sink2 = maintain_doc_landing(
-        spark, stream2, out, "landing_restart2", _sig_transform
-    )
+    sink2 = StreamingDocLandingSink(spark, out, _sig_transform)
+    q2 = attach(stream2, sink2, "landing_restart2")
     try:
         q2.processAllAvailable()
     finally:
@@ -465,9 +484,6 @@ def test_basket_landing_real_stream_restart(spark, tmp_path):
     baskets/edges equal the batch derivation."""
     from pyspark.sql import functions as F
 
-    from data_engineering_project_spotify_app_spark.streaming.landing_stream import (
-        maintain_basket_landing,
-    )
 
     orders, by_order = _lineitems(spark, n_orders=300)
     half = len(orders) // 2
@@ -491,9 +507,8 @@ def test_basket_landing_real_stream_restart(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(src)
     )
-    q, sink = maintain_basket_landing(
-        spark, stream, out, "basket_restart1"
-    )
+    sink = StreamingBasketLandingSink(spark, out)
+    q = attach(stream, sink, "basket_restart1")
     try:
         q.processAllAvailable()
     finally:
@@ -506,9 +521,8 @@ def test_basket_landing_real_stream_restart(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(src)
     )
-    q2, sink2 = maintain_basket_landing(
-        spark, stream2, out, "basket_restart2"
-    )
+    sink2 = StreamingBasketLandingSink(spark, out)
+    q2 = attach(stream2, sink2, "basket_restart2")
     try:
         q2.processAllAvailable()
     finally:

@@ -17,9 +17,9 @@ from data_engineering_project_spotify_app_spark.streaming.ann_stream import (
     VEC_SCHEMA,
     StreamingIvfIndexSink,
     deterministic_centroids,
-    maintain_ivf_index,
     stream_vectors,
 )
+from data_engineering_project_spotify_app_spark.streaming.sinks import attach
 
 registry.load_all_modules()
 
@@ -75,9 +75,8 @@ def test_streamed_index_search_equals_batch(spark, tmp_path):
     _drop_vecs(src, "b0.json", splits[0])
     cent = _centroids_from(spark, vecs)
     out = str(tmp_path / "index")
-    q, sink = maintain_ivf_index(
-        spark, stream_vectors(spark, src), out, "ann_stream1", cent
-    )
+    sink = StreamingIvfIndexSink(spark, out, cent)
+    q = attach(stream_vectors(spark, src), sink, "ann_stream1")
     try:
         q.processAllAvailable()
         for i, batch in enumerate(splits[1:], start=1):

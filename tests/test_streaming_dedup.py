@@ -16,9 +16,9 @@ from data_engineering_project_spotify_app_spark.operators.dedup import (
 from data_engineering_project_spotify_app_spark.streaming.dedup_stream import (
     DOC_SCHEMA,
     StreamingLshDedupSink,
-    maintain_lsh_store,
     stream_documents,
 )
+from data_engineering_project_spotify_app_spark.streaming.sinks import attach
 
 
 def _drop_docs(src, name, rows):
@@ -55,7 +55,8 @@ def test_streamed_pairs_equal_batch_recompute(spark, tmp_path):
     _drop_docs(src, "b0.json", splits[0])
     stream = stream_documents(spark, src, max_files_per_trigger=1)
     out = str(tmp_path / "state")
-    q, sink = maintain_lsh_store(spark, stream, out, "dedup_stream1")
+    sink = StreamingLshDedupSink(spark, out)
+    q = attach(stream, sink, "dedup_stream1")
     try:
         q.processAllAvailable()
         for i, batch in enumerate(splits[1:], start=1):
@@ -91,7 +92,8 @@ def test_replayed_epoch_is_noop_for_pairs_and_store(spark, tmp_path):
     _drop_docs(src, "b0.json", docs)
     stream = stream_documents(spark, src, max_files_per_trigger=1)
     out = str(tmp_path / "state")
-    q, sink = maintain_lsh_store(spark, stream, out, "dedup_stream2")
+    sink = StreamingLshDedupSink(spark, out)
+    q = attach(stream, sink, "dedup_stream2")
     try:
         q.processAllAvailable()
     finally:
@@ -151,9 +153,8 @@ def test_streaming_bucket_cap_drops_degenerate_band(spark, tmp_path):
     _drop_docs(src, "b1.json", hot[6:] + ok[1:])
     out = str(tmp_path / "state")
     stream = stream_documents(spark, src, max_files_per_trigger=1)
-    q, sink = maintain_lsh_store(
-        spark, stream, out, "dedup_capped", bucket_cap=8
-    )
+    sink = StreamingLshDedupSink(spark, out, bucket_cap=8)
+    q = attach(stream, sink, "dedup_capped")
     try:
         q.processAllAvailable()
     finally:
@@ -190,7 +191,7 @@ def test_streamed_line_dedup_equals_batch_on_ascending_ingest(
         dedup_lines,
     )
     from data_engineering_project_spotify_app_spark.streaming.linedup_stream import (
-        maintain_line_dedup,
+        StreamingLineDedupSink,
     )
 
     src = str(tmp_path / "src")
@@ -208,7 +209,8 @@ def test_streamed_line_dedup_equals_batch_on_ascending_ingest(
     _drop_docs(src, "b0.json", splits[0])
     stream = stream_documents(spark, src, max_files_per_trigger=1)
     out = str(tmp_path / "state")
-    q, sink = maintain_line_dedup(spark, stream, out, "linedup_stream1")
+    sink = StreamingLineDedupSink(spark, out)
+    q = attach(stream, sink, "linedup_stream1")
     try:
         q.processAllAvailable()
         for i, batch in enumerate(splits[1:], start=1):
@@ -339,7 +341,8 @@ def test_query_restart_continues_epochs_no_data_loss(spark, tmp_path):
     _drop_docs(src, "b1.json", docs[40:80])
     out = str(tmp_path / "state")
     stream = stream_documents(spark, src, max_files_per_trigger=1)
-    q, sink = maintain_lsh_store(spark, stream, out, "dedup_restart")
+    sink = StreamingLshDedupSink(spark, out)
+    q = attach(stream, sink, "dedup_restart")
     try:
         q.processAllAvailable()
     finally:
@@ -349,7 +352,8 @@ def test_query_restart_continues_epochs_no_data_loss(spark, tmp_path):
     # same out_dir + checkpoint
     _drop_docs(src, "b2.json", docs[80:])
     stream2 = stream_documents(spark, src, max_files_per_trigger=1)
-    q2, sink2 = maintain_lsh_store(spark, stream2, out, "dedup_restart2")
+    sink2 = StreamingLshDedupSink(spark, out)
+    q2 = attach(stream2, sink2, "dedup_restart2")
     try:
         q2.processAllAvailable()
     finally:
@@ -427,6 +431,31 @@ def test_lsh_duplicate_reingest_is_ignored(spark, tmp_path):
     assert want, "fixture slice produced no pairs — test is vacuous"
     assert got == want
     assert len(got) == len({(a, b) for a, b, _ in got})
+
+
+def test_winnow_duplicate_reingest_is_ignored(spark, tmp_path):
+    """The winnowing twin of test_lsh_duplicate_reingest_is_ignored: a
+    later epoch re-delivering only stored doc_ids, one of them twice
+    within the batch, adds no fingerprint rows and no pairs."""
+    from data_engineering_project_spotify_app_spark.streaming.winnow_stream import (
+        StreamingWinnowSink,
+    )
+
+    docs = _corpus(spark, n=60)
+    out = str(tmp_path / "state")
+    sink = StreamingWinnowSink(spark, out)
+    sink(spark.createDataFrame(docs[:40], DOC_SCHEMA), 0)
+    sink(spark.createDataFrame(docs[40:], DOC_SCHEMA), 1)
+    store_before = sink.current_fingerprints().count()
+    pairs_before = sorted(tuple(r) for r in sink.pairs().collect())
+    assert pairs_before == _batch_winnow_pairs(
+        spark, spark.createDataFrame(docs, DOC_SCHEMA)
+    )
+    assert pairs_before, "fixture slice produced no pairs — test is vacuous"
+    sink(spark.createDataFrame(docs[10:50] + [docs[45]], DOC_SCHEMA), 2)
+    assert sink.current_fingerprints().count() == store_before
+    assert sorted(tuple(r) for r in sink.pairs().collect()) == pairs_before
+    assert spark.read.parquet(os.path.join(out, "pairs_e2")).count() == 0
 
 
 def test_line_dedup_duplicate_reingest_is_ignored(spark, tmp_path):
@@ -775,7 +804,7 @@ def test_streamed_winnow_pairs_equal_batch_any_split(spark, tmp_path):
 
 def test_streamed_exact_dedup_via_real_stream(spark, tmp_path):
     from data_engineering_project_spotify_app_spark.streaming.exact_stream import (
-        maintain_exact_dedup,
+        StreamingExactDedupSink,
     )
 
     docs = _corpus(spark, n=50)
@@ -784,7 +813,8 @@ def test_streamed_exact_dedup_via_real_stream(spark, tmp_path):
     _drop_docs(src, "b0.json", docs[:25])
     stream = stream_documents(spark, src, max_files_per_trigger=1)
     out = str(tmp_path / "state")
-    q, sink = maintain_exact_dedup(spark, stream, out, "exact_stream1")
+    sink = StreamingExactDedupSink(spark, out)
+    q = attach(stream, sink, "exact_stream1")
     try:
         q.processAllAvailable()
         _drop_docs(src, "b1.json", docs[25:])

@@ -10,7 +10,8 @@ import time
 from pyspark.sql import functions as F
 
 from data_engineering_project_spotify_app_spark.streaming.sinks import (
-    write_partitioned_exactly_once,
+    EpochSink,
+    attach,
 )
 from data_engineering_project_spotify_app_spark.streaming.stateful import (
     closed_sessions,
@@ -142,7 +143,7 @@ def test_partitioned_sink_prunes_and_replays_safely(spark, tmp_path):
     stream = stream_events(spark, src, max_files_per_trigger=10)
     enriched = stream.withColumn("event_hour", F.hour("ts"))
     out = str(tmp_path / "warehouse")
-    q = write_partitioned_exactly_once(enriched, out, "psink", ["event_hour"])
+    q = attach(enriched, EpochSink(out, "parquet", ["event_hour"]), "psink")
     try:
         q.processAllAvailable()
         _drop(src, "b1.json", [_ev(i, 1, "click", 11, i % 50) for i in range(20, 30)])

@@ -14,8 +14,8 @@ from data_engineering_project_spotify_app_spark.operators.incremental import (
 )
 from data_engineering_project_spotify_app_spark.streaming.rollup import (
     IncrementalRollupSink,
-    maintain_rollup,
 )
+from data_engineering_project_spotify_app_spark.streaming.sinks import attach
 from data_engineering_project_spotify_app_spark.streaming.stream_ops import (
     stream_events,
 )
@@ -46,7 +46,8 @@ def test_streamed_state_equals_batch_recompute(spark, tmp_path):
     _drop(src, "b0.json", rows0)
     stream = stream_events(spark, src, max_files_per_trigger=1)
     out = str(tmp_path / "state")
-    q, sink = maintain_rollup(spark, stream, out, "rollup1")
+    sink = IncrementalRollupSink(spark, out)
+    q = attach(stream, sink, "rollup1")
     try:
         q.processAllAvailable()
         _drop(src, "b1.json", rows1)
@@ -67,7 +68,8 @@ def test_replayed_epoch_is_skipped(spark, tmp_path):
     _drop(src, "b0.json", [_ev(i, "click") for i in range(10)])
     stream = stream_events(spark, src, max_files_per_trigger=1)
     out = str(tmp_path / "state")
-    q, sink = maintain_rollup(spark, stream, out, "rollup2")
+    sink = IncrementalRollupSink(spark, out)
+    q = attach(stream, sink, "rollup2")
     try:
         q.processAllAvailable()
     finally:

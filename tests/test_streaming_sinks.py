@@ -7,8 +7,8 @@ import os
 import time
 
 from data_engineering_project_spotify_app_spark.streaming.sinks import (
-    EpochJsonSink,
-    write_exactly_once,
+    EpochSink,
+    attach,
 )
 from data_engineering_project_spotify_app_spark.streaming.stream_ops import (
     stream_events,
@@ -42,7 +42,7 @@ def test_every_row_lands_exactly_once(spark, tmp_path):
     _drop(src, "b0.json", [_ev(i) for i in range(10)])
     stream = stream_events(spark, src, max_files_per_trigger=1)
     out = str(tmp_path / "out")
-    q = write_exactly_once(stream, out, "eo1")
+    q = attach(stream, EpochSink(out), "eo1")
     try:
         q.processAllAvailable()
         _drop(src, "b1.json", [_ev(i) for i in range(10, 25)])
@@ -53,14 +53,14 @@ def test_every_row_lands_exactly_once(spark, tmp_path):
     got = _read_all(spark, out, stream.schema)
     ids = sorted(r["event_id"] for r in got.select("event_id").collect())
     assert ids == list(range(25))
-    sink = EpochJsonSink(out)
+    sink = EpochSink(out)
     assert len(sink.committed_epochs()) >= 2
 
 
 def test_replayed_epoch_is_skipped(spark, tmp_path):
     """Simulate an epoch retry: calling the sink twice with the same
     epoch id must not duplicate rows."""
-    sink = EpochJsonSink(str(tmp_path / "out"))
+    sink = EpochSink(str(tmp_path / "out"))
     df = spark.range(5).selectExpr("id AS event_id")
     sink(df, epoch_id=0)
     sink(df, epoch_id=0)  # replay after "failure"
@@ -72,7 +72,7 @@ def test_replayed_epoch_is_skipped(spark, tmp_path):
 def test_uncommitted_epoch_is_overwritten_on_retry(spark, tmp_path):
     """A crash between data write and commit marker → retry overwrites."""
     out = str(tmp_path / "out")
-    sink = EpochJsonSink(out)
+    sink = EpochSink(out)
     df1 = spark.range(3).selectExpr("id AS event_id")
     # first attempt: data written but no _COMMITTED (simulated crash)
     df1.write.mode("overwrite").json(os.path.join(out, "epoch=7"))
