@@ -533,7 +533,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Rungs: broadcast (small dim) → AQE-decided shuffle join (default)
     → THIS, for joins that recur on the same key. land_bucketed writes
-    both sides bucketed+sorted on the key with matching bucket counts,
+    both sides bucketed+sorted on the key with corpus_buckets()'s count,
     so the join itself reads co-located buckets with NO Exchange on
     either side (plan pinned in tests/test_bucketed.py and
     tests/test_plans.py). At 100 TB the landing is the nightly table
@@ -544,6 +544,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from data_engineering_project_spotify_app_spark.sources.bucketed import (
         bucketed_join,
+        corpus_buckets,
         land_bucketed,
     )
 
@@ -551,7 +552,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # overwritten on re-run (idempotent), never cross-SF stale reads
     tok = "".join(c if c.isalnum() else "_" for c in sf_dir.rstrip("/").rsplit("/", 1)[-1])
     t_orders, t_lineitem = f"b_orders_{tok}", f"b_lineitem_{tok}"
-    n_buckets = max(8, spark.sparkContext.defaultParallelism)
+    n_buckets = corpus_buckets(spark, sf_dir)
     o = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("okey"), "o_orderpriority"
     )

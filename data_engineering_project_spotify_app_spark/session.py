@@ -8,6 +8,11 @@ of that is engine configuration, set once here:
   Spark default and not restated here (runtime re-plan = the
   reference's "read total, then size the fan-out" trick at
   app.py:155–158, generalized to every shuffle);
+- join strategy: the static planner keeps Spark's default (sort-merge
+  for shuffle joins, decided on estimated sizes); AQE turns a
+  sort-merge join into a shuffled-hash join only when every measured
+  post-shuffle partition is under
+  ``spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold`` (64m);
 - shuffle partitions sized to cores for local runs — on a real cluster
   AQE coalesces, so over-provisioning is safe;
 - UTC session timezone (oracle comparisons and any cross-engine exchange);
@@ -81,25 +86,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Prefer shuffled-hash over sort-merge when the planner's size
-        # conditions allow a per-partition hash build, and let AQE
-        # convert remaining SMJs at runtime when every post-shuffle
-        # partition measures under the threshold (r14 A/B on the
-        # SMJ-heavy set at sf0.1: 17.4 -> 15.2 s; q_bfs_hops -37%,
-        # q_pagerank -31%). The two knobs gate differently (ADVICE r14):
-        # - the AQE threshold converts on MEASURED post-shuffle partition
-        #   sizes — safe at any scale;
-        # - preferSortMergeJoin=false converts in the STATIC planner on
-        #   ESTIMATED plan sizes (sizeInBytes < threshold ×
-        #   numShufflePartitions). An under-estimated build side (e.g.
-        #   behind a selective-looking filter or a UDF) can OOM an
-        #   executor at scale where SMJ would have spilled — SHJ's build
-        #   hash map does not spill. Both are runtime SQL confs: a
-        #   deployment that hits the estimate-miss mode restores
-        #   sort-merge with spark.conf.set(
-        #   "spark.sql.join.preferSortMergeJoin", "true") or the same
-        #   key in extra_conf (AQE skew-join stays on either way).
-        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # an events.parquet may store TIMESTAMP(NANOS), which a vanilla

@@ -64,10 +64,7 @@ def stage_entity_keyed(df: DataFrame, staging_dir: str, entity: str) -> str:
     )
 
     spark = df.sparkSession
-    try:
-        spark.dataSource.register(KeyedJsonDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(KeyedJsonDataSource)
     out = f"{staging_dir}/{entity}"
     (
         df.filter(F.col("id").isNotNull())

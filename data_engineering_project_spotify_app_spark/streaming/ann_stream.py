@@ -190,7 +190,8 @@ class StreamingIvfIndexSink(DeltaChainStore):
         retrain k=|old centroid set| via retrain_centroids from the
         at-rest vectors), reassign EVERY stored vector, and write a
         fresh delta-chain store in ``out_dir`` whose base folds the
-        entire current index at the current max epoch.
+        entire current index at the current max epoch. The returned
+        sink keeps this sink's ``auto_compact_every``.
 
         A NEW directory is required (same-dir rebuild raises): every
         stored row changes cid, so the rebuild is a full-store rewrite,
@@ -221,7 +222,9 @@ class StreamingIvfIndexSink(DeltaChainStore):
         epochs = self.committed_delta_epochs()
         base = self._base_epoch()
         target = max(epochs + ([base] if base is not None else []))
-        new_sink = StreamingIvfIndexSink(self.spark, out_dir, centroids)
+        new_sink = StreamingIvfIndexSink(
+            self.spark, out_dir, centroids, self.auto_compact_every
+        )
         os.makedirs(out_dir, exist_ok=True)
         new_sink._commit(
             _assign(index.select("vec_id", "v", "nrm"), centroids),

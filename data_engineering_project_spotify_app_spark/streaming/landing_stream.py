@@ -29,7 +29,11 @@ store maintainers:
 the batch consumers expect and adopts it via sources.bucketed.
 seed_landing, so every landed_frame consumer (q_minhash_lsh,
 q_triangle_count, ...) reads the maintained table with zero query
-changes. The adoption is durable: seed_landing records the table's
+changes. Every published table takes its bucket count from
+sources.bucketed.corpus_buckets(spark, sf_dir), the count the batch
+landings of the same corpus get, so co-bucketed joins between a
+published and a batch-built landing keep their exchange-free plan.
+The adoption is durable: seed_landing records the table's
 DDL in a warehouse-resident marker, so consumers in LATER processes
 (fresh catalog, same warehouse) re-register and read the published
 table too — publish once per compaction, consume from anywhere — for
@@ -86,13 +90,14 @@ class StreamingDocLandingSink(DeltaChainStore):
         transform: Callable[[DataFrame], DataFrame],
         dedupe_guard: bool = True,
         auto_compact_every: int | None = None,
-        publish_to: tuple[str, str, int] | None = None,
+        publish_to: tuple[str, str] | None = None,
     ) -> None:
-        """``publish_to=(sf_dir, prefix, n_buckets)`` turns the sink
-        fully hands-off: every auto-compaction (requires
+        """``publish_to=(sf_dir, prefix)`` turns the sink fully
+        hands-off: every auto-compaction (requires
         ``auto_compact_every``) is followed by a publish(), so batch
         consumers read a maintained table that refreshes at compaction
-        cadence with no operator intervention. Publish rewrites the
+        cadence with no operator intervention. The table's bucket
+        count is corpus_buckets(spark, sf_dir). Publish rewrites the
         bucketed table — O(store) — which is why it rides the
         compaction trigger rather than every epoch."""
         super().__init__(spark, out_dir, dedupe_guard, auto_compact_every)
@@ -109,8 +114,7 @@ class StreamingDocLandingSink(DeltaChainStore):
             )
         self._commit(self.transform(batch), self._delta_dir(epoch_id))
         if self.maybe_compact() and self.publish_to is not None:
-            sf_dir, prefix, n_buckets = self.publish_to
-            self.publish(sf_dir, prefix, n_buckets)
+            self.publish(*self.publish_to)
 
     def current_landing(self) -> DataFrame | None:
         """The landing as of now: plain union of the delta chain (each
@@ -121,19 +125,19 @@ class StreamingDocLandingSink(DeltaChainStore):
         self,
         sf_dir: str,
         prefix: str,
-        n_buckets: int,
         bucket_col: str = "doc_id",
         sort_cols: list[str] | None = None,
     ) -> str:
         """Land the current state as the bucketed managed table batch
-        consumers expect and adopt it as THE landing for
-        (prefix, sf_dir). Returns the table name. The published name is
-        suffixed so it never collides with a batch-built landing of the
-        same corpus."""
+        consumers expect, with corpus_buckets(spark, sf_dir) buckets,
+        and adopt it as THE landing for (prefix, sf_dir). Returns the
+        table name. The published name is suffixed so it never collides
+        with a batch-built landing of the same corpus."""
         landing = self.current_landing()
         if landing is None:
             raise ValueError("nothing ingested yet — nothing to publish")
         name = landing_table_name(prefix, sf_dir) + "_streamed"
+        n_buckets = corpus_buckets(self.spark, sf_dir)
         land_bucketed(landing, name, bucket_col, n_buckets, sort_cols)
         seed_landing(self.spark, sf_dir, prefix, name)
         return name
@@ -170,9 +174,7 @@ class StreamingBasketLandingSink(DeltaChainStore):
         (requires ``auto_compact_every``) is followed by publish(), so
         the basket AND edge landings (plus the derived adjacency, via
         publish's refresh) track the stream at compaction cadence with
-        no operator intervention. Bucket counts use publish()'s
-        defaults: corpus_buckets(spark, sf_dir), the count the batch
-        landings of the same corpus get."""
+        no operator intervention."""
         super().__init__(spark, out_dir, dedupe_guard, auto_compact_every)
         self.strict_whole_orders = strict_whole_orders
         self.publish_to = publish_to
@@ -276,12 +278,11 @@ class StreamingBasketLandingSink(DeltaChainStore):
     def publish(
         self,
         sf_dir: str,
-        basket_buckets: int | None = None,
-        edge_buckets: int | None = None,
         refresh_adjacency: bool = True,
     ) -> tuple[str, str]:
         """Land the maintained baskets and edges as the bucketed tables
-        the batch consumers expect, adopt both via seed_landing, and
+        the batch consumers expect (corpus_buckets(spark, sf_dir)
+        buckets each), adopt both via seed_landing, and
         (by default) drop the derived oriented-adjacency landing so its
         consumers re-derive it from the maintained edges — the O(|E|)
         publish-cadence job discussed in the module docstring. Returns
@@ -291,13 +292,11 @@ class StreamingBasketLandingSink(DeltaChainStore):
         if baskets is None or edges is None:
             raise ValueError("nothing ingested yet — nothing to publish")
         n_buckets = corpus_buckets(self.spark, sf_dir)
-        bb = basket_buckets or n_buckets
-        eb = edge_buckets or n_buckets
         bname = landing_table_name("part_baskets", sf_dir) + "_streamed"
-        land_bucketed(baskets, bname, "l_orderkey", bb)
+        land_bucketed(baskets, bname, "l_orderkey", n_buckets)
         seed_landing(self.spark, sf_dir, "part_baskets", bname)
         ename = landing_table_name("copurchase_edges", sf_dir) + "_streamed"
-        land_bucketed(edges, ename, "src", eb, sort_cols=["src", "dst"])
+        land_bucketed(edges, ename, "src", n_buckets, ["src", "dst"])
         seed_landing(self.spark, sf_dir, "copurchase_edges", ename)
         if refresh_adjacency:
             # The adjacency is derived FROM the edge landing: drop its

@@ -162,11 +162,11 @@ class StreamingWinnowSink(PairLogStore):
     def publish(
         self,
         sf_dir: str,
-        n_buckets: int | None = None,
         allow_partial: bool = False,
     ) -> str:
         """Land the maintained fingerprint store as the fp-bucketed
-        managed table batch consumers expect and adopt it as THE
+        managed table batch consumers expect (corpus_buckets(spark,
+        sf_dir) buckets) and adopt it as THE
         ``winnow_fingerprints`` landing for sf_dir — q_winnowing_pairs
         (and any winnowing_pairs_from_fps caller) then reads the
         streamed state with zero query changes, exactly the
@@ -240,9 +240,7 @@ class StreamingWinnowSink(PairLogStore):
         name = (
             landing_table_name(self.landing_prefix, sf_dir) + "_streamed"
         )
-        land_bucketed(
-            fps, name, "fp", n_buckets or corpus_buckets(self.spark, sf_dir)
-        )
+        land_bucketed(fps, name, "fp", corpus_buckets(self.spark, sf_dir))
         seed_landing(self.spark, sf_dir, self.landing_prefix, name)
         return name
 

@@ -3,11 +3,13 @@
 
 Blows the sf0.1 fixtures up M× by unioning key-offset copies (8 disjoint
 shards — the same growth shape as adding corpus shards at 100 TB) and
-compares wall time against the 1× run. A bucketed/capped operator should
-scale ~linearly (ratio ≈ M on a saturated box, < M while cores are still
-idle at 1×); a quadratic candidate-explosion or a serialized stage shows
-up as ratio >> M. This is an internal posture probe — the driver-checked
-correctness fixtures stay the only correctness inputs.
+compares wall time against the 1× run. Each probe is timed as a
+``noop``-format write of its output, like scale_probe_queries.py. A
+bucketed/capped operator should scale ~linearly (ratio ≈ M on a
+saturated box, < M while cores are still idle at 1×); a quadratic
+candidate-explosion or a serialized stage shows up as ratio >> M. This
+is an internal posture probe — the driver-checked correctness fixtures
+stay the only correctness inputs.
 
 Usage: python scripts/scale_probe.py [M] [sf_dir]
 """
@@ -175,6 +177,12 @@ def _land_edges(spark, li, name):
     drop_landed(spark, name)
 
 
+def _run(df) -> None:
+    # a noop write materializes every output column; count() would let
+    # column pruning skip the work the probe means to time
+    df.write.format("noop").mode("overwrite").save()
+
+
 def best_of(n, fn):
     best = 1e18
     for _ in range(n):
@@ -197,35 +205,35 @@ def main() -> None:
     probes = [
         (
             "ngram_jaccard (capped)",
-            lambda d=docs1: ngram_jaccard_pairs(d, df_cap="auto").count(),
-            lambda d=docsM: ngram_jaccard_pairs(d, df_cap="auto").count(),
+            lambda d=docs1: _run(ngram_jaccard_pairs(d, df_cap="auto")),
+            lambda d=docsM: _run(ngram_jaccard_pairs(d, df_cap="auto")),
         ),
         (
             "simhash_hamming (capped)",
-            lambda d=docs1: simhash_hamming_pairs_df(
+            lambda d=docs1: _run(simhash_hamming_pairs_df(
                 d, cap_df=d.agg(F.lit(64).alias("bucket_cap"))
-            ).count(),
-            lambda d=docsM: simhash_hamming_pairs_df(
+            )),
+            lambda d=docsM: _run(simhash_hamming_pairs_df(
                 d, cap_df=d.agg(F.lit(64).alias("bucket_cap"))
-            ).count(),
+            )),
         ),
         (
             "minhash_lsh (capped)",
-            lambda d=docs1: minhash_candidate_pairs_df(
+            lambda d=docs1: _run(minhash_candidate_pairs_df(
                 minhash_signatures_df(d), bucket_cap="auto", cap_df=d
-            ).count(),
-            lambda d=docsM: minhash_candidate_pairs_df(
+            )),
+            lambda d=docsM: _run(minhash_candidate_pairs_df(
                 minhash_signatures_df(d), bucket_cap="auto", cap_df=d
-            ).count(),
+            )),
         ),
         (
             "dedup_lines (k=4)",
-            lambda d=docs1: dedup_lines(d, 4).count(),
-            lambda d=docsM: dedup_lines(d, 4).count(),
+            lambda d=docs1: _run(dedup_lines(d, 4)),
+            lambda d=docsM: _run(dedup_lines(d, 4)),
         ),
         (
             "triangle_counts",
-            lambda l=li1: triangle_counts(
+            lambda l=li1: _run(triangle_counts(
                 pairs_from_lineitem(l).select(
                     F.col("src"), F.col("dst")
                 ).unionByName(
@@ -233,8 +241,8 @@ def main() -> None:
                         F.col("dst").alias("src"), F.col("src").alias("dst")
                     )
                 )
-            ).count(),
-            lambda l=liM: triangle_counts(
+            )),
+            lambda l=liM: _run(triangle_counts(
                 pairs_from_lineitem(l).select(
                     F.col("src"), F.col("dst")
                 ).unionByName(
@@ -242,7 +250,7 @@ def main() -> None:
                         F.col("dst").alias("src"), F.col("src").alias("dst")
                     )
                 )
-            ).count(),
+            )),
         ),
         (
             # the landed-adjacency path the triangle family actually
@@ -252,19 +260,19 @@ def main() -> None:
             # per-node degrees unchanged, so |N⁺| stays O(√|E_shard|)
             # and the chain must scale ~linearly in shards.
             "triangle via oriented adj",
-            lambda l=li1: _triangle_counts_from_oadj(
+            lambda l=li1: _run(_triangle_counts_from_oadj(
                 _oriented_adjacency(pairs_from_lineitem(l))
-            ).count(),
-            lambda l=liM: _triangle_counts_from_oadj(
+            )),
+            lambda l=liM: _run(_triangle_counts_from_oadj(
                 _oriented_adjacency(pairs_from_lineitem(l))
-            ).count(),
+            )),
         ),
         (
             # clustering-coefficient shape = triangle chain + the
             # one-aggregate wedge count over degrees
             "clustering coeff (landed shape)",
-            lambda l=li1: _clustering_shape(l).count(),
-            lambda l=liM: _clustering_shape(l).count(),
+            lambda l=li1: _run(_clustering_shape(l)),
+            lambda l=liM: _run(_clustering_shape(l)),
         ),
         (
             # the landing WRITE itself (pay-the-shuffle-once bucketed
@@ -275,36 +283,36 @@ def main() -> None:
         ),
         (
             "weighted_jaccard (capped)",
-            lambda d=docs1: weighted_jaccard_pairs(d, df_cap="auto").count(),
-            lambda d=docsM: weighted_jaccard_pairs(d, df_cap="auto").count(),
+            lambda d=docs1: _run(weighted_jaccard_pairs(d, df_cap="auto")),
+            lambda d=docsM: _run(weighted_jaccard_pairs(d, df_cap="auto")),
         ),
         (
             "incremental_dedup (delta)",
-            lambda d=docs1: incremental_candidate_pairs_df(
+            lambda d=docs1: _run(incremental_candidate_pairs_df(
                 minhash_signatures_df(d)
-            ).count(),
-            lambda d=docsM: incremental_candidate_pairs_df(
+            )),
+            lambda d=docsM: _run(incremental_candidate_pairs_df(
                 minhash_signatures_df(d)
-            ).count(),
+            )),
         ),
         (
             # doc-sharded by construction: every stage keys on doc_id,
             # so disjoint shard copies must scale ~linearly
             "intra_doc_dedup",
-            lambda d=docs1: intra_doc_dedup(d).count(),
-            lambda d=docsM: intra_doc_dedup(d).count(),
+            lambda d=docs1: _run(intra_doc_dedup(d)),
+            lambda d=docsM: _run(intra_doc_dedup(d)),
         ),
         (
             # the diagonal-islands pair stage is corpus-global
             # (capped gram buckets) — same law as ngram_jaccard
             "remove_overlaps (floor 8)",
-            lambda d=docs1: remove_overlaps_df(d, MIN_LCS_TOKENS).count(),
-            lambda d=docsM: remove_overlaps_df(d, MIN_LCS_TOKENS).count(),
+            lambda d=docs1: _run(remove_overlaps_df(d, MIN_LCS_TOKENS)),
+            lambda d=docsM: _run(remove_overlaps_df(d, MIN_LCS_TOKENS)),
         ),
         (
             "remove_overlaps_short (4)",
-            lambda d=docs1: remove_overlaps_df(d, LCS_GRAM).count(),
-            lambda d=docsM: remove_overlaps_df(d, LCS_GRAM).count(),
+            lambda d=docs1: _run(remove_overlaps_df(d, LCS_GRAM)),
+            lambda d=docsM: _run(remove_overlaps_df(d, LCS_GRAM)),
         ),
         (
             # winnowing's heavy stage is the fingerprint self-join;
@@ -314,21 +322,21 @@ def main() -> None:
             # growth (sub-linear here is the cap doing its job, the
             # HOF gram/min pipeline upstream is per-doc linear)
             "winnowing pairs (capped)",
-            lambda d=docs1: winnowing_pairs_df(d).count(),
-            lambda d=docsM: winnowing_pairs_df(d).count(),
+            lambda d=docs1: _run(winnowing_pairs_df(d)),
+            lambda d=docsM: _run(winnowing_pairs_df(d)),
         ),
         (
             # word-gram granularity: same cap law as the char form
             "winnowing word pairs",
-            lambda d=docs1: winnowing_word_pairs_df(d).count(),
-            lambda d=docsM: winnowing_word_pairs_df(d).count(),
+            lambda d=docs1: _run(winnowing_word_pairs_df(d)),
+            lambda d=docsM: _run(winnowing_word_pairs_df(d)),
         ),
         (
             # SRP-GEMM buckets + one (bucket, source) aggregate — the
             # only probe with NO pair/join-explosion stage at all; the
             # law here is plain linear scan+agg
             "cluster source balance",
-            lambda: _balance_shape(
+            lambda: _run(_balance_shape(
                 srp_buckets_df(
                     table_parallel(spark, sf_dir, "embeddings").select(
                         "vec_id",
@@ -338,8 +346,8 @@ def main() -> None:
                     )
                 ),
                 docs1.select(F.col("doc_id").alias("vec_id"), "source"),
-            ).count(),
-            lambda: _balance_shape(
+            )),
+            lambda: _run(_balance_shape(
                 srp_buckets_df(
                     blow_up_embeddings(
                         table_parallel(
@@ -354,7 +362,7 @@ def main() -> None:
                     )
                 ),
                 docsM.select(F.col("doc_id").alias("vec_id"), "source"),
-            ).count(),
+            )),
         ),
     ]
     only = sys.argv[3] if len(sys.argv) > 3 else None

@@ -128,9 +128,15 @@ def test_published_signature_landing_consumer_matches_oracle(
         [docs[:third], docs[third:2 * third], docs[2 * third:]]
     ):
         sink(spark.createDataFrame(batch, DOC_SCHEMA), e)
-    name = sink.publish(SF, "minhash_signatures", n_buckets=8)
+    name = sink.publish(SF, "minhash_signatures")
     try:
         assert spark.catalog.tableExists(name)
+        # same bucket count as the batch landings of this corpus
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+        (n_buckets,) = [
+            r["data_type"] for r in rows if r["col_name"] == "Num Buckets"
+        ]
+        assert int(n_buckets) == bucketed.corpus_buckets(spark, SF)
         # the consumer must actually READ the published table
         plan = registry.QUERIES["q_minhash_lsh"](
             spark, SF
@@ -414,7 +420,7 @@ def test_published_simhash_landing_consumer_matches_oracle(spark, tmp_path):
     half = len(docs) // 2
     for e, batch in enumerate([docs[half:], docs[:half]]):
         sink(spark.createDataFrame(batch, DOC_SCHEMA), e)
-    name = sink.publish(SF, "simhash_signatures", n_buckets=8)
+    name = sink.publish(SF, "simhash_signatures")
     try:
         for qname in ("q_simhash", "q_simhash_hamming"):
             compare(
@@ -451,7 +457,7 @@ def test_published_winnow_landing_consumer_matches_oracle(spark, tmp_path):
         [docs[:third], docs[third:2 * third], docs[2 * third:]]
     ):
         sink(spark.createDataFrame(batch, DOC_SCHEMA), e)
-    name = sink.publish(SF, n_buckets=8)
+    name = sink.publish(SF)
     try:
         assert spark.catalog.tableExists(name)
         q = registry.QUERIES["q_winnowing_pairs"](spark, SF)
@@ -610,7 +616,7 @@ def test_landing_lifecycle_growth_staleness_republish(spark, tmp_path):
     sink = StreamingDocLandingSink(spark, out, _sig_transform)
     sink(spark.createDataFrame(docs[: half_n // 2], DOC_SCHEMA), 0)
     sink(spark.createDataFrame(docs[half_n // 2:], DOC_SCHEMA), 1)
-    name = sink.publish(corpus, "minhash_signatures", n_buckets=8)
+    name = sink.publish(corpus, "minhash_signatures")
     try:
         # step 1: consumer on the half corpus reads the published table
         # and matches its oracle
@@ -647,7 +653,7 @@ def test_landing_lifecycle_growth_staleness_republish(spark, tmp_path):
         delta = [d for d in grown if d[0] not in {x[0] for x in docs}]
         assert delta
         sink(spark.createDataFrame(delta, DOC_SCHEMA), 2)
-        name2 = sink.publish(corpus, "minhash_signatures", n_buckets=8)
+        name2 = sink.publish(corpus, "minhash_signatures")
         plan3 = registry.QUERIES["q_minhash_lsh"](
             spark, corpus
         )._jdf.queryExecution().executedPlan().toString()
@@ -722,7 +728,7 @@ def test_auto_publish_refreshes_consumer_table(spark, tmp_path):
         out,
         _sig_transform,
         auto_compact_every=2,
-        publish_to=(SF, "minhash_signatures", 8),
+        publish_to=(SF, "minhash_signatures"),
     )
     try:
         sink(spark.createDataFrame(docs[:30], DOC_SCHEMA), 0)
@@ -772,12 +778,12 @@ def test_partial_winnow_store_refuses_publish(spark, tmp_path):
     half = len(docs) // 2
     sink(spark.createDataFrame(docs[:half], DOC_SCHEMA), 0)
     with pytest.raises(PartialStoreError, match="fingerprinted docs"):
-        sink.publish(SF, n_buckets=8)
+        sink.publish(SF)
     # nothing was seeded: no durable marker, batch landing untouched
     marker = bucketed._seed_marker_path(spark, "winnow_fingerprints", SF)
     assert not os.path.isfile(marker)
     sink(spark.createDataFrame(docs[half:], DOC_SCHEMA), 1)
-    name = sink.publish(SF, n_buckets=8)  # complete now: allowed
+    name = sink.publish(SF)  # complete now: allowed
     try:
         assert spark.catalog.tableExists(name)
         assert os.path.isfile(marker)
@@ -832,8 +838,8 @@ def test_streamed_granularity_agreement_equals_batch(spark, tmp_path):
          docs[third:2 * third]]
     ):
         word_sink(spark.createDataFrame(b, DOC_SCHEMA), e)
-    cname = char_sink.publish(SF, n_buckets=8)
-    wname = word_sink.publish(SF, n_buckets=8)
+    cname = char_sink.publish(SF)
+    wname = word_sink.publish(SF)
     try:
         q = registry.QUERIES["q_winnow_granularity_agreement"](spark, SF)
         plan = q._jdf.queryExecution().executedPlan().toString()
@@ -884,7 +890,7 @@ def test_divergent_winnow_store_refuses_publish(spark, tmp_path):
     sink1 = StreamingWinnowSink(spark, str(tmp_path / "w_shift"))
     sink1(spark.createDataFrame(shifted, DOC_SCHEMA), 0)
     with pytest.raises(PartialStoreError, match="not in the\\s+corpus"):
-        sink1.publish(SF, n_buckets=8)
+        sink1.publish(SF)
     assert not os.path.isfile(marker)
     # Case 2: SUPERSET — the full corpus plus extra foreign docs, so
     # got > expected (the old check's blind spot in the other
@@ -893,10 +899,10 @@ def test_divergent_winnow_store_refuses_publish(spark, tmp_path):
     sink2 = StreamingWinnowSink(spark, str(tmp_path / "w_super"))
     sink2(spark.createDataFrame(docs + extra, DOC_SCHEMA), 0)
     with pytest.raises(PartialStoreError, match="not in the\\s+corpus"):
-        sink2.publish(SF, n_buckets=8)
+        sink2.publish(SF)
     assert not os.path.isfile(marker)
     # allow_partial remains the documented override for both shapes
-    name = sink2.publish(SF, n_buckets=8, allow_partial=True)
+    name = sink2.publish(SF, allow_partial=True)
     try:
         assert spark.catalog.tableExists(name)
     finally:
@@ -968,7 +974,7 @@ def test_published_word_winnow_landing_consumer_matches_oracle(
         [docs[:third], docs[third:2 * third], docs[2 * third:]]
     ):
         sink(spark.createDataFrame(batch, DOC_SCHEMA), e)
-    name = sink.publish(SF, n_buckets=8)
+    name = sink.publish(SF)
     try:
         assert name.startswith("winnow_word_fingerprints")
         assert spark.catalog.tableExists(name)
@@ -1029,19 +1035,19 @@ def test_publish_guard_tracks_inplace_corpus_regeneration(spark, tmp_path):
     _write_docs(gen1)
     sink1 = StreamingWinnowSink(spark, str(tmp_path / "regen_s1"))
     sink1(spark.createDataFrame(gen1, DOC_SCHEMA), 0)
-    name1 = sink1.publish(corpus, n_buckets=4)  # warms the guard cache
+    name1 = sink1.publish(corpus)  # warms the guard cache
     try:
         assert spark.catalog.tableExists(name1)
         # corpus regenerated in place: the gen-1 store is now stale and
         # must be REFUSED (a stale cache would let it through) ...
         _write_docs(gen2)
         with pytest.raises(PartialStoreError):
-            sink1.publish(corpus, n_buckets=4)
+            sink1.publish(corpus)
         # ... while a store rebuilt from the new corpus must be ACCEPTED
         # (a stale cache would refuse it against gen-1 ids)
         sink2 = StreamingWinnowSink(spark, str(tmp_path / "regen_s2"))
         sink2(spark.createDataFrame(gen2, DOC_SCHEMA), 0)
-        name2 = sink2.publish(corpus, n_buckets=4)
+        name2 = sink2.publish(corpus)
         assert spark.catalog.tableExists(name2)
     finally:
         bucketed.invalidate_landings(corpus)

@@ -123,6 +123,21 @@ def test_aqe_coalesces_shuffle_partitions_at_runtime(spark, sf_dir):
     assert "AQEShuffleRead" in final_plan or "AdaptiveSparkPlan" in final_plan
 
 
+def test_static_planner_keeps_sort_merge_join(spark):
+    """The static planner chooses join strategy from ESTIMATED sizes, so
+    it must keep Spark's sort-merge default: a shuffled-hash build map
+    does not spill, and an under-estimated build side would OOM at
+    scale. Only AQE, on measured post-shuffle partition sizes, may turn
+    a sort-merge join into a shuffled-hash join. Neither side of this
+    pair fits the broadcast threshold, and the smaller one is small
+    enough for a static shuffled-hash join if the session preferred
+    it. The planner output is read without running a job."""
+    df = spark.range(200_000_000).join(spark.range(10_000_000), "id")
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    assert "SortMergeJoin" in plan, plan
+    assert "ShuffledHashJoin" not in plan, plan
+
+
 def test_correlated_subquery_is_decorrelated(spark, sf_dir):
     """The correlated scalar subquery must lower to aggregate+join, not a
     per-row subquery plan."""

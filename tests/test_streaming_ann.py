@@ -248,6 +248,27 @@ def test_rebuild_refuses_in_place(spark, tmp_path):
     with _pytest.raises(ValueError, match="fresh out_dir"):
         sink.rebuild_index(out)
 
+
+def test_rebuild_keeps_auto_compaction(spark, tmp_path):
+    """The rebuilt sink compacts on the old sink's cadence: with
+    auto_compact_every=2, the second post-rebuild epoch folds the
+    delta chain into the base."""
+    vecs = _vectors(spark)[:200]
+    cent = _centroids_from(spark, vecs)
+    sink = StreamingIvfIndexSink(
+        spark, str(tmp_path / "index"), cent, auto_compact_every=2
+    )
+    sink(spark.createDataFrame(vecs[:100], VEC_SCHEMA), 0)
+    sink2 = sink.rebuild_index(str(tmp_path / "index2"), centroids=cent)
+    assert sink2.auto_compact_every == 2
+    sink2(spark.createDataFrame(vecs[100:150], VEC_SCHEMA), 1)
+    assert sink2.committed_delta_epochs() == [1]
+    sink2(spark.createDataFrame(vecs[150:], VEC_SCHEMA), 2)
+    assert sink2.committed_delta_epochs() == []
+    assert sink2._base_epoch() == 2
+    assert sink2.current_index().count() == len(vecs)
+
+
 def test_rebuild_swap_under_concurrent_ingest(spark, tmp_path):
     """The documented swap protocol under CONCURRENT ingest: epochs
     that commit to the OLD sink between the rebuild snapshot and the
